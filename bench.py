@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from p6_spark.materialize import release  # noqa: E402
 from p6_spark.plans import get_queries  # noqa: E402
 from p6_spark.session import get_spark  # noqa: E402
 
@@ -33,68 +34,21 @@ def headline_names() -> list[str]:
         return json.load(f)["headline"]
 
 
-def iterative_names() -> list[str]:
-    """Second manifest section (appended round 5): the pagerank-class
-    iterative queries. Timed in the same run and reported inside
-    "queries" + an "iterative_total" field; the headline "value" stays
-    the sum of the frozen headline set only, so BENCH_r*.json totals
-    remain superset-comparable with rounds ≤4."""
+def manifest_sections(registered) -> dict[str, list[str]]:
+    """Every list-valued BENCH_MANIFEST section, in manifest order, with
+    the registered names it owns: a name belongs to the first section
+    that lists it. "headline" is the frozen set behind "value"; each
+    later section (appended one per round) is timed in the same run and
+    reported inside "queries" plus a "<section>_total" field."""
     with open(_MANIFEST) as f:
-        return json.load(f).get("iterative", [])
-
-
-def r6_names() -> list[str]:
-    """Third manifest section (appended round 6): the incremental-ingest
-    + composed-ANN family. Same contract as "iterative": timed in the
-    run, reported inside "queries" + an "r6_total" field; the frozen
-    headline "value" is untouched."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r6", [])
-
-
-def r7_names() -> list[str]:
-    """Fourth manifest section (appended round 7): the recall family
-    (multi-probe ANN + blocking-quality audit). Same appended-section
-    contract: timed, reported in "queries" + "r7_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r7", [])
-
-
-def r9_names() -> list[str]:
-    """Round-9 eval-rigor/budget additions (BENCH_MANIFEST 'r9'):
-    timed, reported in "queries" + "r9_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r9", [])
-
-
-def r9b_names() -> list[str]:
-    """Round-9 measurement-trust additions (BENCH_MANIFEST 'r9b'):
-    timed, reported in "queries" + "r9b_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r9b", [])
-
-
-def r10_names() -> list[str]:
-    """Round-10 productionization additions (BENCH_MANIFEST 'r10'):
-    timed, reported in "queries" + "r10_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r10", [])
-
-
-def r11_names() -> list[str]:
-    """Round-11 mixture dead-letter twins (BENCH_MANIFEST 'r11'):
-    timed, reported in "queries" + "r11_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r11", [])
-
-
-def r8_names() -> list[str]:
-    """Fifth manifest section (appended round 8): the curation family
-    (shard balance, curriculum order, dataloader plan, mutual-kNN
-    graph, threshold sweep, cross-shard dup audit). Same contract:
-    timed, reported in "queries" + "r8_total"."""
-    with open(_MANIFEST) as f:
-        return json.load(f).get("r8", [])
+        manifest = json.load(f)
+    seen: set[str] = set()
+    sections: dict[str, list[str]] = {}
+    for key, names in manifest.items():
+        if isinstance(names, list):
+            sections[key] = [n for n in names if n in registered and n not in seen]
+            seen.update(sections[key])
+    return sections
 
 
 # Bench-noise sentinel (VERDICT r10 item 6): BENCH_NOTES' discard-the-
@@ -190,34 +144,12 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("p6_spark_bench")
     qs = get_queries()
-    head = [n for n in headline_names() if n in qs]
-    iters = [n for n in iterative_names() if n in qs and n not in head]
-    r6 = [n for n in r6_names() if n in qs and n not in head and n not in iters]
-    r7 = [n for n in r7_names() if n in qs and n not in head + iters + r6]
-    r8 = [n for n in r8_names() if n in qs and n not in head + iters + r6 + r7]
-    r9 = [
-        n for n in r9_names() if n in qs and n not in head + iters + r6 + r7 + r8
-    ]
-    r9b = [
-        n
-        for n in r9b_names()
-        if n in qs and n not in head + iters + r6 + r7 + r8 + r9
-    ]
-    r10 = [
-        n
-        for n in r10_names()
-        if n in qs and n not in head + iters + r6 + r7 + r8 + r9 + r9b
-    ]
-    r11 = [
-        n
-        for n in r11_names()
-        if n in qs
-        and n not in head + iters + r6 + r7 + r8 + r9 + r9b + r10
-    ]
+    sections = manifest_sections(qs)
+    head = sections.pop("headline")
     names = (
         list(qs)
         if args.all
-        else head + iters + r6 + r7 + r8 + r9 + r9b + r10 + r11
+        else head + [n for section in sections.values() for n in section]
     )
     # Optional comma-separated subset for local iteration / regression
     # bisection (e.g. SPARK_GRAFT_BENCH_QUERIES=q01_pricing_summary,q06_...)
@@ -226,14 +158,10 @@ def main() -> None:
         keep = {s.strip() for s in only.split(",") if s.strip()}
         names = [n for n in names if n in keep]
         head = [n for n in head if n in keep]
-        iters = [n for n in iters if n in keep]
-        r6 = [n for n in r6 if n in keep]
-        r7 = [n for n in r7 if n in keep]
-        r8 = [n for n in r8 if n in keep]
-        r9 = [n for n in r9 if n in keep]
-        r9b = [n for n in r9b if n in keep]
-        r10 = [n for n in r10 if n in keep]
-        r11 = [n for n in r11 if n in keep]
+        sections = {
+            key: [n for n in section if n in keep]
+            for key, section in sections.items()
+        }
 
     # Warmup: run every query once (untimed) so JVM startup +
     # WholeStageCodegen (Janino) compilation isn't billed to the timed
@@ -308,12 +236,7 @@ def main() -> None:
         # r6 time before this). Each query is billed its own
         # materializations (the timed runs above include them); it just
         # starts from a clean block store.
-        spark.catalog.clearCache()
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        release(spark)
         if sentinel_samples and qi in checkpoints:
             sentinel_samples.append(
                 measure_sentinel(spark, qs, sf_dir, args.runs)
@@ -335,22 +258,10 @@ def main() -> None:
     if sentinel_samples:
         sentinel_samples.append(measure_sentinel(spark, qs, sf_dir, args.runs))
         out["sentinel"] = sentinel_samples_verdict(sentinel_samples)
-    if not args.all and iters:
-        out["iterative_total"] = round(sum(timings[n] for n in iters), 4)
-    if not args.all and r6:
-        out["r6_total"] = round(sum(timings[n] for n in r6), 4)
-    if not args.all and r7:
-        out["r7_total"] = round(sum(timings[n] for n in r7), 4)
-    if not args.all and r8:
-        out["r8_total"] = round(sum(timings[n] for n in r8), 4)
-    if not args.all and r9:
-        out["r9_total"] = round(sum(timings[n] for n in r9), 4)
-    if not args.all and r9b:
-        out["r9b_total"] = round(sum(timings[n] for n in r9b), 4)
-    if not args.all and r10:
-        out["r10_total"] = round(sum(timings[n] for n in r10), 4)
-    if not args.all and r11:
-        out["r11_total"] = round(sum(timings[n] for n in r11), 4)
+    if not args.all:
+        for key, section in sections.items():
+            if section:
+                out[f"{key}_total"] = round(sum(timings[n] for n in section), 4)
     if args.all:
         fams: dict[str, float] = {}
         for n, t in timings.items():

@@ -18,12 +18,10 @@ tiny and dense, so 3-5 rounds in practice. localCheckpoint every round
 truncates the lineage so the plan doesn't grow exponentially (the
 classic iterative-Spark trap).
 
-Lineage-cut discipline (round 12, after the round-11 32-core
-regression): a ``localCheckpoint(eager=False)`` lazy cut is allowed
-ONLY when the very next driver action is a scalar (count) whose plan
-references the cut frame exactly once — that one job materializes the
-blocks and computes the scalar, and nothing else can race it. Every
-other cut is EAGER. Round 11 deferred round cuts to whatever action
+Lineage cuts go through ``p6_spark.materialize`` (its docstring holds
+the eager/lazy rule and the cluster-deployment note). Round 12, after
+the round-11 32-core regression: every cut here is EAGER except the
+single safe lazy shape. Round 11 deferred round cuts to whatever action
 came next (often a broadcast build on the driver's broadcast thread, or
 a plan that referenced the cut twice, e.g. a union of two selects over
 it); at local[32] concurrent tasks then recomputed the un-persisted
@@ -36,21 +34,6 @@ every round to driver-side broadcast builds at local[32]. The round
 joins plan as plain exchange joins again (the round-10 shape the driver
 measured fast at 32 cores).
 
-Cluster-deployment note (applies to every iterative operator in this
-module — CC, k-core, BFS, pagerank, cheapest-path): ``localCheckpoint``
-pins the cut lineage to executor-local block storage, which is the
-right call in local mode and on short jobs, but the blocks die with the
-executor — on a 1000-executor / 100 TB run a single executor loss would
-fail the job instead of recomputing. There, set a checkpoint dir
-(``spark.sparkContext.setCheckpointDir('hdfs://...')``) and set
-``P6_SPARK_RELIABLE_CHECKPOINT=1``: every lineage cut in this module
-goes through ``_materialize``, which swaps in reliable
-``DataFrame.checkpoint()`` — same semantics, blocks land on HDFS/object
-storage and survive executor churn, at the cost of one write+read
-round-trip per round. ``localCheckpoint`` stays the default because the
-harness runs single-JVM; the reliable mode is smoke-tested
-(tests/test_graph.py) so the swap can't bit-rot.
-
 Not SQL-expressible in one query (recursive), so the registry entry is
 rows-only; correctness is pinned by tests against a driver-side
 union-find on the same edges.
@@ -58,29 +41,10 @@ union-find on the same edges.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Lineage cut for the iterative loops in this module:
-    ``localCheckpoint`` by default (single-JVM / short jobs); with
-    ``P6_SPARK_RELIABLE_CHECKPOINT=1`` and a configured checkpoint dir,
-    reliable ``checkpoint()`` instead — see the module docstring's
-    cluster-deployment note.
-
-    ``eager=False`` is reserved for the single safe shape (module
-    docstring): the caller's NEXT statement is a driver-side count
-    whose plan references this frame exactly once, so that one job
-    materializes the blocks and computes the scalar. Any frame that is
-    read more than once before a materializing action, or whose first
-    materialization would ride on a broadcast build, must stay eager.
-    """
-    if os.environ.get("P6_SPARK_RELIABLE_CHECKPOINT") == "1":
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+from p6_spark.materialize import materialize
 
 
 def connected_components(
@@ -115,14 +79,14 @@ def connected_components(
     the module docstring (driver-measured 32-core regression; the guard
     meant they never engaged at 100 TB anyway).
     """
-    sym = _materialize(
+    sym = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct(),
         eager=False,
     )
     # fused round 1 (see docstring): every node appears as u in sym
-    labels = _materialize(
+    labels = materialize(
         sym.groupBy("u").agg(
             F.least(F.col("u"), F.min("v")).alias("label")
         ).select(F.col("u").alias("node"), "label"),
@@ -140,7 +104,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = _materialize(  # truncate lineage each round
+        new_labels = materialize(  # truncate lineage each round
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
@@ -207,8 +171,8 @@ def pagerank_fixed(
     # the degree/node derivations reuse it, instead of re-running the
     # upstream joins per round (the iterative-Spark lineage trap —
     # same localCheckpoint pattern as connected_components)
-    e = _materialize(edges.select(F.col("src"), F.col("dst")).distinct())
-    nodes = _materialize(
+    e = materialize(edges.select(F.col("src"), F.col("dst")).distinct())
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -217,7 +181,7 @@ def pagerank_fixed(
     # out-degree table cut once and reused by every damping round
     # (round 11's one keeper here: previously each round re-aggregated
     # it from e's blocks — one extra exchange per round)
-    deg = _materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
+    deg = materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
         "node", F.expr(f"{scale}L div n").alias("rank")
     )
@@ -241,7 +205,7 @@ def pagerank_fixed(
         )
         # materialize each round once: without this, round k's lazy
         # lineage re-executes every earlier round on each reference
-        ranks = _materialize(ranks)
+        ranks = materialize(ranks)
     return ranks
 
 
@@ -282,13 +246,13 @@ def bfs_hops(
     the old isEmpty — the eager checkpoint computed every partition
     anyway, so this is strictly fewer jobs, not more work).
     """
-    e = _materialize(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    nodes = _materialize(
+    e = materialize(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    nodes = materialize(
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
         .distinct()
     )
-    reached = _materialize(
+    reached = materialize(
         nodes.filter(F.col("node") % seed_mod == 0).withColumn("hop", F.lit(0))
     )
     frontier = reached.select("node")
@@ -299,7 +263,7 @@ def bfs_hops(
         bwd = e.join(frontier.withColumnRenamed("node", "b"), "b").select(
             F.col("a").alias("node")
         )
-        discovered = _materialize(
+        discovered = materialize(
             fwd.union(bwd)
             .distinct()
             .join(reached.select("node"), "node", "left_anti")
@@ -309,7 +273,7 @@ def bfs_hops(
         # one job: materializes the frontier blocks AND tests drain
         if discovered.count() == 0:
             break
-        reached = _materialize(reached.union(discovered))
+        reached = materialize(reached.union(discovered))
         frontier = discovered.select("node")
     final = reached.select("node", "hop")
     return nodes.join(final, "node", "left").select("node", "hop")

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.operators.similarity import cosine
 from p6_spark.operators.text import md5_int
 
@@ -248,12 +249,12 @@ def ivf_topk_fixed(
     # and the index assignment all read the same quantized projection
     # (round-11; previously each of those jobs re-read parquet and
     # re-ran the quantize transform). Identical arithmetic, 1 corpus
-    # scan instead of iters+2. At 100 TB swap the localCheckpoint for
-    # a persisted projection (or accept the re-scan); the pass-count
-    # win is structural either way.
-    q = corpus.select(
-        F.col(id_col).alias("match_id"), quantize(F.col(vec_col)).alias("mqv")
-    ).localCheckpoint()
+    # scan instead of iters+2.
+    q = materialize(
+        corpus.select(
+            F.col(id_col).alias("match_id"), quantize(F.col(vec_col)).alias("mqv")
+        )
+    )
     model = train_centroids_fixed(
         q, k=num_centroids, iters=iters, id_col="match_id", vec_col="mqv",
         pre_quantized=True,

@@ -15,10 +15,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q04_order_priority",
     oracle="""
@@ -35,11 +31,11 @@ ORDER BY o_orderpriority
     tags=("join", "semi", "subquery"),
 )
 def q04(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     matched = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
@@ -73,11 +69,11 @@ ORDER BY supp_nation, cust_nation, yr
     tags=("join", "agg", "self-join"),
 )
 def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     sn = nation.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -122,9 +118,9 @@ ORDER BY n_name
     tags=("window", "agg"),
 )
 def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     per_nation = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -165,9 +161,9 @@ LIMIT 20
     tags=("join", "subquery", "agg", "topk"),
 )
 def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,12)")).alias("q"))
@@ -209,9 +205,9 @@ ORDER BY p_partkey
     tags=("window", "join", "subquery-rewrite"),
 )
 def q_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") < 5)
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") < 5)
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
     w = W.partitionBy("p_partkey").orderBy(F.desc("s_acctbal"), F.asc("s_name"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -255,7 +251,7 @@ FROM per_session GROUP BY user_id ORDER BY user_id
     tags=("window", "sessionize"),
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     flagged = ev.withColumn(
@@ -303,7 +299,7 @@ ORDER BY user_id, purchase_id
     tags=("window", "asof"),
 )
 def q_asof_prior_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -344,7 +340,7 @@ def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.rangejoin import banded_range_join
     from p6_spark.plans.core_relational import dsum as _dsum
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bands = spark.range(10).select(
         (F.col("id") * 50).cast("double").alias("lo"),
         (F.col("id") * 50 + 50).cast("double").alias("hi"),
@@ -386,8 +382,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.skew import salted_join
     from p6_spark.plans.core_relational import dsum as _dsum
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     joined = salted_join(
         li.select(F.col("l_partkey").alias("p_partkey"), "l_extendedprice"),
         part,
@@ -428,8 +424,8 @@ ORDER BY nationkey
     tags=("join", "full-outer", "agg"),
 )
 def q_full_outer_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
+    cust = load_table(spark, sf_dir, "customer")
+    sup = load_table(spark, sf_dir, "supplier")
     rich_c = (
         cust.filter(F.col("c_acctbal") > 9000)
         .groupBy(F.col("c_nationkey").alias("c_nk"))
@@ -472,7 +468,7 @@ FROM daily ORDER BY day_num
     tags=("window", "range-frame"),
 )
 def q_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         (F.unix_timestamp("o_orderdate") / F.lit(86400))
         .cast("bigint")
@@ -502,7 +498,7 @@ GROUP BY event_type ORDER BY event_type
     tags=("json", "agg"),
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.groupBy("event_type")
@@ -534,7 +530,7 @@ GROUP BY label ORDER BY label
     tags=("array", "agg"),
 )
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     first = F.element_at("embedding", 1).cast("double")
     return (
         emb.groupBy("label")
@@ -571,7 +567,7 @@ ORDER BY window_start, event_type
     tags=("window", "streaming-parity"),
 )
 def q_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
     return (
@@ -608,7 +604,7 @@ ORDER BY event_type
     tags=("map", "json", "higher-order"),
 )
 def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "m", F.from_json("props", "map<string,bigint>")
     )
     return (
@@ -657,7 +653,7 @@ ORDER BY label
     tags=("array", "higher-order", "agg"),
 )
 def q_higher_order_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     t = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1000).cast("bigint")
     )
@@ -705,7 +701,7 @@ ORDER BY l_returnflag
     tags=("math", "bitwise", "agg"),
 )
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -767,8 +763,8 @@ ORDER BY merge_status
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.merge import merge_upsert
 
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     tgt = cust.filter(F.col("c_custkey") % 10 != 0).select(
         "c_custkey",
         "c_nationkey",
@@ -849,7 +845,7 @@ ORDER BY prio, quartile
 def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     o = orders.select(
         F.col("o_orderpriority").alias("prio"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
@@ -908,7 +904,7 @@ ORDER BY l_returnflag, measure
     tags=("unpivot", "reshape", "agg"),
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     long = li.unpivot(
         ids=["l_returnflag"],
         values=["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
@@ -953,7 +949,7 @@ ORDER BY l_returnflag
     tags=("stats", "agg", "moments"),
 )
 def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.round(F.col("l_extendedprice"), 0).cast("bigint")
     y = F.round(F.col("l_quantity"), 0).cast("bigint")
     d = li.select("l_returnflag", x.alias("price_usd"), y.alias("qty"))
@@ -999,7 +995,7 @@ ORDER BY l_linestatus
     tags=("null", "semantics", "agg"),
 )
 def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc = F.nullif(F.round(F.col("l_discount") * 100, 0).cast("bigint"), F.lit(0))
     tax = F.nullif(F.round(F.col("l_tax") * 100, 0).cast("bigint"), F.lit(0))
     x = li.select("l_linestatus", disc.alias("disc_pct"), tax.alias("tax_pct"))
@@ -1042,7 +1038,7 @@ ORDER BY bucket
     tags=("histogram", "binning", "agg"),
 )
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     # bucket = clamp(cents * 20 div 20_000_000, 0, 19) — pure bigint binning
     b = orders.select(
         F.least(
@@ -1088,7 +1084,7 @@ ORDER BY source
     tags=("regex", "string", "agg"),
 )
 def q_regex_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy("source")
         .agg(
@@ -1125,7 +1121,7 @@ ORDER BY p_brand
     tags=("cast", "null", "semantics"),
 )
 def q_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     suffix = F.expr("try_cast(substring(p_brand, 7, 10) as bigint)")
     return (
         part.groupBy("p_brand")
@@ -1185,7 +1181,7 @@ FROM per_user
     tags=("events", "funnel", "window"),
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
@@ -1260,7 +1256,7 @@ ORDER BY j.cohort_week, j.offset_w
     tags=("events", "retention", "cohort"),
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     weekly = ev.select(
         "user_id",
         (F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")) / 7)
@@ -1327,7 +1323,7 @@ ORDER BY user_id, session_start
     tags=("window", "sessionize", "streaming-parity"),
 )
 def q_session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(
@@ -1364,7 +1360,7 @@ ORDER BY user_id
     tags=("agg", "streaming-parity"),
 )
 def q_user_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .agg(
@@ -1396,7 +1392,7 @@ ORDER BY p.user_id, purchase_id, view_id
     tags=("join", "range-join", "streaming-parity"),
 )
 def q_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = ev.filter(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
@@ -1482,8 +1478,8 @@ LIMIT 20
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.graph import pagerank_fixed
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     edges = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
@@ -1529,7 +1525,7 @@ ORDER BY prev_type, next_type
     tags=("window", "events", "sequence"),
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.withColumn("prev_type", F.lag("event_type").over(w))
     return (
@@ -1579,7 +1575,7 @@ ORDER BY d.event_type
     tags=("agg", "statistics", "robust"),
 )
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").alias("med_value")
     )
@@ -1638,7 +1634,7 @@ ORDER BY p.probe_ts
     tags=("window", "scd2", "range-join", "temporal"),
 )
 def q_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("signup", "purchase")
     )
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1649,7 +1645,7 @@ def q_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("ts").over(w).alias("valid_to"),
     )
     probes = F.broadcast(
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .sparkSession.createDataFrame(
             [("2024-01-08",), ("2024-01-15",), ("2024-01-22",)], "probe_ts string"
         )
@@ -1721,7 +1717,7 @@ FROM locf GROUP BY user_id ORDER BY user_id
     tags=("window", "timeseries", "gapfill", "temporal"),
 )
 def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 10)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", F.col("ts")).alias("bucket")
     ).agg(
@@ -1797,7 +1793,7 @@ ORDER BY event_type
     tags=("window", "anomaly", "statistics", "fixed-point"),
 )
 def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     v = ev.select(
         "event_type",
         "ts",
@@ -1862,7 +1858,7 @@ LIMIT 20
     tags=("window", "range-frame", "events", "monitoring"),
 )
 def q_rate_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
         "event_id",
@@ -1918,7 +1914,7 @@ ORDER BY rank
     tags=("skew", "profiling", "agg"),
 )
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     freq = li.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -1981,7 +1977,7 @@ LIMIT 15
     tags=("window", "agg", "bi", "fixed-point"),
 )
 def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
     ).cast("long")

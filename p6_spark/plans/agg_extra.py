@@ -21,10 +21,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q_string_agg",
     oracle="""
@@ -50,7 +46,7 @@ ORDER BY c.p_type
     tags=("agg", "string"),
 )
 def q_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     per_type = part.groupBy("p_type").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.size(F.collect_set("p_brand")).alias("n_brands"),
@@ -91,7 +87,7 @@ ORDER BY med.l_returnflag
     tags=("agg", "window", "statistics"),
 )
 def q_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     counts = li.groupBy(
         "l_returnflag", F.col("l_quantity").cast("bigint").alias("qty")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -137,7 +133,7 @@ ORDER BY event_type
     tags=("agg", "boolean"),
 )
 def q_bool_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -176,8 +172,8 @@ ORDER BY n.n_name, t.c_acctbal DESC, t.c_name
     tags=("lateral", "subquery", "topk"),
 )
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_LATERAL_SQL)
 
 
@@ -212,8 +208,8 @@ SELECT
     tags=("subquery", "null-semantics", "anti-join"),
 )
 def q_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_NOT_IN_SQL)
 
 
@@ -260,7 +256,7 @@ ORDER BY doc_id, tfidf_x1e6 DESC, token
 def txt_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     tok = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -313,7 +309,7 @@ FROM t GROUP BY ord ORDER BY ord
     tags=("generator", "explode", "agg"),
 )
 def q_generators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     toks = part.select(
         "p_partkey", F.posexplode(F.split("p_name", " ")).alias("pos", "tok")
     )
@@ -348,7 +344,7 @@ ORDER BY ALL
     tags=("agg", "sql-surface"),
 )
 def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_GROUP_BY_ALL_SQL)
 
 
@@ -374,7 +370,7 @@ ORDER BY op, o_custkey
     tags=("set-ops", "bag", "agg"),
 )
 def q_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     high = orders.filter(F.col("o_orderpriority") == "2-HIGH").select("o_custkey")
     ex = (

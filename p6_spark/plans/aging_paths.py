@@ -10,13 +10,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +54,7 @@ FROM bucketed GROUP BY bucket ORDER BY bucket
     tags=("bi", "finance", "agg", "fixed-point"),
 )
 def q_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     asof = orders.agg(F.max("o_orderdate").alias("today"))
     open_orders = (
         orders.filter(F.col("o_orderstatus") == "O")
@@ -141,7 +138,7 @@ ORDER BY top_pct
 def q_pareto_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import two_phase_rank
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("cents")
     )
@@ -240,8 +237,8 @@ GROUP BY b.cost ORDER BY cost
 def q_graph_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    sigs = dd.minhash_signatures(docs).localCheckpoint()
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    sigs = materialize(dd.minhash_signatures(docs))
     pairs = dd.lsh_candidate_pairs(sigs)
     sa = sigs.select(
         F.col("doc_id").alias("u"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(8)]
@@ -265,24 +262,24 @@ def q_graph_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store — the exact scheme behind the driver's 32-core regression
     # (and what ADVICE r11 flagged here). Blocks land before any round
     # reads them; the per-round joins plan as plain exchange joins.
-    edges = (
+    edges = materialize(
         wpairs.select("u", "v", "w")
         .unionAll(wpairs.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .localCheckpoint()
     )
     nodes = edges.select(F.col("u").alias("node")).distinct()
-    dist = nodes.filter(F.col("node") % 10 == 0).select(
-        "node", F.lit(0).cast("long").alias("cost")
-    ).localCheckpoint()
+    dist = materialize(
+        nodes.filter(F.col("node") % 10 == 0).select(
+            "node", F.lit(0).cast("long").alias("cost")
+        )
+    )
     for _ in range(_BF_HOPS):
         du = dist.select(F.col("node").alias("u"), "cost")
-        relaxed = (
+        relaxed = materialize(
             edges.join(du, "u")
             .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
             .unionAll(dist)
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
         )
         dist = relaxed
     return (

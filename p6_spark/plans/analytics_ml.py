@@ -21,10 +21,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # OHLC bars
 # ---------------------------------------------------------------------------
@@ -64,7 +60,7 @@ ORDER BY event_type, hr
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00").alias("hr"),
@@ -125,7 +121,7 @@ ORDER BY dow
     tags=("timeseries", "agg", "fixed-point"),
 )
 def q_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.round(F.col("value") * 1000000, 0).cast("long")
     per_dow = ev.groupBy((F.weekday("ts") + 1).alias("dow")).agg(
         F.count(F.lit(1)).alias("n_events"), F.sum(v).alias("sum_x1e6")
@@ -189,7 +185,7 @@ ORDER BY zbucket
     tags=("layout", "bitwise", "scale"),
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     keyed = orders.select(
         (F.col("o_custkey") % 256).cast("int").alias("cb"),
         (F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")) % 256)
@@ -235,8 +231,8 @@ ORDER BY o_orderpriority
     tags=("bitwise", "agg", "join"),
 )
 def q_bitmap_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     joined = orders.join(cust, orders.o_custkey == cust.c_custkey)
     bm = F.expr("bit_or(shiftleft(cast(1 as bigint), cast(c_nationkey as int)))")
     return (
@@ -300,7 +296,7 @@ ORDER BY flag
     tags=("ml", "agg", "fixed-point"),
 )
 def ml_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("long")
     y = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0).cast(
         "long"
@@ -387,7 +383,7 @@ LIMIT 5
     tags=("ml", "window", "fixed-point"),
 )
 def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     labeled = li.select(
         F.col("l_quantity").cast("long").alias("qty"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos"),
@@ -469,7 +465,7 @@ ORDER BY query_id
     tags=("ml", "similarity", "fixed-point"),
 )
 def ml_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.transform("embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long"))
     e = emb.select("vec_id", "label", qv.alias("qv"))
     q = (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _SQL_IVF_MODEL
 from p6_spark.plans.market_ml import _PQ_DIMS, _PQ_SUBSPACES, _sql_pq_code
 from p6_spark.plans.registry import register
@@ -116,9 +117,11 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan, both Lloyd rounds, and the coarse assignment (previously 4
     # parquet re-reads + re-quantizes). The PQ code pass still reads
     # the raw floats — it needs the un-quantized sign grid.
-    qc = emb.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
-    ).localCheckpoint()
+    qc = materialize(
+        emb.select(
+            "vec_id", quantize(F.col("embedding")).alias("qv")
+        )
+    )
     model = train_centroids_fixed(qc, k=8, iters=2, vec_col="qv", pre_quantized=True)
 
     # index build: coarse list assignment + PQ codes, one corpus pass each
@@ -303,7 +306,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("query_id").alias("qid"), "match_id", F.col("rnk").alias("drnk"))
     )
 
-    toks = dd.distinct_tokens(docs, "doc_id", "text").localCheckpoint()
+    toks = materialize(dd.distinct_tokens(docs, "doc_id", "text"))
     tsz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     qt = toks.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("qid"), "tok"
@@ -466,7 +469,7 @@ def sim_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("query_id").alias("qid"), "match_id", F.col("rnk").alias("drnk"))
     )
 
-    toks = dd.distinct_tokens(docs, "doc_id", "text").localCheckpoint()
+    toks = materialize(dd.distinct_tokens(docs, "doc_id", "text"))
     tsz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     qt = toks.filter(F.col("doc_id") < 3).select(F.col("doc_id").alias("qid"), "tok")
     inter = (
@@ -496,7 +499,7 @@ def sim_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "match_id", "lrnk")
     )
 
-    shared = dense.join(lex, ["qid", "match_id"]).localCheckpoint()
+    shared = materialize(dense.join(lex, ["qid", "match_id"]))
     a, b = shared.alias("a"), shared.alias("b")
     disagree = (F.col("a.drnk") - F.col("b.drnk")) * (
         F.col("a.lrnk") - F.col("b.lrnk")

@@ -14,10 +14,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # 2-D histogram (heatmap input)
 # ---------------------------------------------------------------------------
@@ -42,7 +38,7 @@ ORDER BY qty_bin, disc_bin
     tags=("bi", "histogram", "agg", "fixed-point"),
 )
 def q_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
             F.expr("cast(l_quantity as bigint) div 10").alias("qty_bin"),
@@ -98,7 +94,7 @@ ORDER BY c.cohort_year, c.year_offset
     tags=("bi", "cohort", "join", "fixed-point"),
 )
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     firsts = orders.groupBy("o_custkey").agg(F.min("o_orderdate").alias("first_order"))
     cohorted = orders.join(firsts, "o_custkey").select(
         F.date_format("first_order", "yyyy").alias("cohort_year"),
@@ -155,7 +151,7 @@ ORDER BY user_id, event_type
     tags=("dedup", "cdc", "window"),
 )
 def q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     wr = W.partitionBy("user_id", "event_type").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -213,7 +209,7 @@ ORDER BY prio
     tags=("stats", "percentile", "window", "fixed-point"),
 )
 def q_quartile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     per_v = orders.groupBy(
         F.col("o_orderpriority").alias("prio"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("v"),

@@ -17,10 +17,6 @@ from p6_spark.sources.tables import load_table
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Bigram language-model scoring (add-one smoothing, snapped-ln integers)
 # ---------------------------------------------------------------------------
@@ -84,7 +80,7 @@ LIMIT 25
 def txt_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("t")).filter(
         F.size("t") >= 2
     )
@@ -210,7 +206,7 @@ FROM un, inter
 def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import md5_int
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cut = "1998-01-01 00:00:00"
 
     def sketch(pred):
@@ -335,7 +331,7 @@ LIMIT 25
     tags=("dedup", "text", "provenance", "window", "scale"),
 )
 def dd_span_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
         .filter(F.size("w") >= 8)
@@ -447,7 +443,7 @@ ORDER BY depth
     tags=("events", "funnel", "window", "fixed-point"),
 )
 def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),

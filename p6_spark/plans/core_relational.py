@@ -75,10 +75,6 @@ def fast_exact_sums(
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Aggregation over the fact table
 # ---------------------------------------------------------------------------
@@ -109,7 +105,7 @@ ORDER BY l_returnflag, l_linestatus
     tags=("agg", "filter"),
 )
 def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return fast_exact_sums(
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")),
@@ -140,7 +136,7 @@ WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
     tags=("agg", "filter", "pushdown"),
 )
 def q06(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -182,11 +178,11 @@ LIMIT 10
     tags=("join", "agg", "topk"),
 )
 def q03(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-06-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1997-03-01").cast("timestamp")
     )
     return (
@@ -226,14 +222,14 @@ ORDER BY revenue DESC, n_name
     tags=("join", "agg", "broadcast"),
 )
 def q05(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dims = cust.join(
         F.broadcast(nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)),
         cust.c_nationkey == nation.n_nationkey,
@@ -264,8 +260,8 @@ ORDER BY n_customers DESC, n_orders DESC
     tags=("join", "outer", "agg"),
 )
 def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -289,8 +285,8 @@ SELECT
     tags=("join", "semi", "anti"),
 )
 def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     f_orders = orders.filter(F.col("o_orderstatus") == "F")
     with_f = cust.join(f_orders, cust.c_custkey == f_orders.o_custkey, "left_semi").count()
     without = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").count()
@@ -322,8 +318,8 @@ ORDER BY c_mktsegment, rn
     tags=("window", "topk", "join"),
 )
 def q_topk_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -352,7 +348,7 @@ ORDER BY user_id, event_id
     tags=("window",),
 )
 def q_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         ev.withColumn(
@@ -392,7 +388,7 @@ ORDER BY status, priority
     tags=("rollup", "agg"),
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -424,7 +420,7 @@ ORDER BY returnflag, linestatus
     tags=("cube", "agg"),
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(dsum(F.col("l_quantity")).alias("sum_qty"), F.count(F.lit(1)).alias("n"))
@@ -454,7 +450,7 @@ ORDER BY o_orderpriority
     tags=("pivot", "agg"),
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     out = (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -489,7 +485,7 @@ SELECT
     tags=("setop", "distinct"),
 )
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey").distinct()
     high = orders.filter(F.col("o_orderpriority") == "2-HIGH").select("o_custkey").distinct()
     n_union = urgent.union(high).distinct().count()
@@ -515,7 +511,7 @@ FROM lineitem
     tags=("distinct", "agg"),
 )
 def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -541,7 +537,7 @@ LIMIT 25
     tags=("sort", "limit"),
 )
 def q_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return part.select("p_partkey", "p_name", "p_retailprice").orderBy(
         F.desc("p_retailprice"), F.asc("p_partkey")
     ).limit(25)
@@ -565,7 +561,7 @@ ORDER BY type_prefix
     tags=("string", "agg"),
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return (
         part.groupBy(F.upper(F.substring("p_type", 1, 8)).alias("type_prefix"))
         .agg(
@@ -598,7 +594,7 @@ ORDER BY yr, mon
     tags=("date", "agg"),
 )
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(
             F.year("o_orderdate").alias("yr"), F.month("o_orderdate").alias("mon")
@@ -632,7 +628,7 @@ ORDER BY user_id
     tags=("agg", "case"),
 )
 def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .agg(
@@ -666,7 +662,7 @@ ORDER BY window_start, event_type
     tags=("window", "streaming-parity"),
 )
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
     return (

@@ -20,10 +20,6 @@ _SQL_BPE_TOKENS = (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # One full BPE merge step (find best pair -> apply greedy merge -> stats)
 # ---------------------------------------------------------------------------
@@ -88,7 +84,7 @@ FROM per_doc
     tags=("text", "tokenizer", "bpe", "iterative"),
 )
 def txt_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.filter(bpe_ish_tokens(F.col("text")), lambda x: x != "")
     base = docs.select("doc_id", t.alias("t"))
     pairs = (
@@ -205,7 +201,7 @@ FROM orders"""
 def pipe_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import functools
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     parts = []
     for c in _PROFILE_COLS:
         rep = _profile_repr(c, "spark")
@@ -277,7 +273,7 @@ ORDER BY r.source, r.rnk
 def txt_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tok
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.select("doc_id", "source", _tok(F.col("text")).alias("t"))
         .select(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _sql_adaptive_cand
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
@@ -491,7 +492,7 @@ def _mutual_knn_edges(
     from p6_spark.operators.similarity import cosine, lsh_candidate_vec_pairs
 
     # pairs feed both union branches -> one lineage cut (the r6 lesson)
-    pairs = lsh_candidate_vec_pairs(emb, **lsh_kwargs).localCheckpoint()
+    pairs = materialize(lsh_candidate_vec_pairs(emb, **lsh_kwargs))
     sym = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -516,7 +517,8 @@ def _mutual_knn_edges(
             .alias("cos_x1e6"),
         )
     )
-    topk = (
+    # referenced twice by the mutuality self-join
+    topk = materialize(
         scored.withColumn(
             "rn",
             F.row_number().over(
@@ -525,7 +527,6 @@ def _mutual_knn_edges(
         )
         .filter(F.col("rn") <= k)
         .select("src", "dst")
-        .localCheckpoint()  # referenced twice by the mutuality self-join
     )
     return (
         topk.alias("a")
@@ -579,13 +580,12 @@ def dd_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = spark.createDataFrame(
         [(t,) for t in _THRESHOLDS], "thr_x1e6 long"
     )
-    hits = (
+    # hits feeds two aggregates (pair count + distinct docs): one
+    # lineage cut so the LSH+Jaccard subtree executes once
+    hits = materialize(
         scored.crossJoin(F.broadcast(thr))
         .filter(F.col("jaccard_x1e6") >= F.col("thr_x1e6"))
         .select("thr_x1e6", "id_a", "id_b")
-        # hits feeds two aggregates (pair count + distinct docs): one
-        # lineage cut so the LSH+Jaccard subtree executes once
-        .localCheckpoint()
     )
     np_ = hits.groupBy("thr_x1e6").agg(F.count(F.lit(1)).alias("n_pairs"))
     nd = (
@@ -696,7 +696,8 @@ def pipe_post_dedup_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.broadcast(
         spark.createDataFrame(list(mix_w.items()), "lang string, w_x1e6 long")
     )
-    j = (
+    # feeds both min-total aggregates and the final projection
+    j = materialize(
         w.join(before, "lang")
         .join(after, "lang", "left")
         .select(
@@ -705,8 +706,6 @@ def pipe_post_dedup_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avail_before",
             F.coalesce("avail_after", F.lit(0)).alias("avail_after"),
         )
-        # feeds both min-total aggregates and the final projection
-        .localCheckpoint()
     )
     totals = j.agg(
         F.min(
@@ -779,7 +778,9 @@ def dd_cross_shard_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards = _serpentine_shard(docs).select("doc_id", "shard")
     sa = shards.select(F.col("doc_id").alias("id_a"), F.col("shard").alias("shard_a"))
     sb = shards.select(F.col("doc_id").alias("id_b"), F.col("shard").alias("shard_b"))
-    classified = (
+    # feeds the pair count AND the distinct-doc explode: one cut so
+    # the LSH+Jaccard+rank subtree executes once
+    classified = materialize(
         dups.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
@@ -789,9 +790,6 @@ def dd_cross_shard_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_a",
             "id_b",
         )
-        # feeds the pair count AND the distinct-doc explode: one cut so
-        # the LSH+Jaccard+rank subtree executes once
-        .localCheckpoint()
     )
     pairs_agg = classified.groupBy("scope").agg(
         F.count(F.lit(1)).alias("n_pairs")

@@ -15,10 +15,6 @@ from p6_spark.sources.tables import load_table
 _CUTOVER = "2024-01-15"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Snapshot diff
 # ---------------------------------------------------------------------------
@@ -68,7 +64,7 @@ ORDER BY category
     tags=("quality", "diff", "join", "fixed-point"),
 )
 def pipe_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.round(F.col("value") * 1000000, 0).cast("long")
 
     def snap(pred):
@@ -148,7 +144,7 @@ ORDER BY log2_bucket
     tags=("funnel", "timeseries", "fixed-point"),
 )
 def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first_view = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -213,7 +209,7 @@ ORDER BY source
     tags=("dedup", "quality", "agg"),
 )
 def dd_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
         "source",
         F.md5(F.col("text")).alias("raw_digest"),
@@ -297,7 +293,7 @@ LIMIT 25
 def dd_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.select(
             "doc_id", F.split(F.col("text"), " ").alias("w")

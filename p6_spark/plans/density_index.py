@@ -11,12 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +79,7 @@ ORDER BY label, role
 def ml_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.similarity import lsh_candidate_vec_pairs
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
     )
@@ -90,7 +87,7 @@ def ml_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sym union below references cand TWICE — without a lineage cut
     # the whole 4-table signature + bucket-cap subtree executes twice
     # (r6 verdict finding 2; ml_dbscan_clusters applies the same cut)
-    cand = lsh_candidate_vec_pairs(emb).localCheckpoint()
+    cand = materialize(lsh_candidate_vec_pairs(emb))
     sym = cand.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("w")
     ).unionAll(cand.select(F.col("id_b").alias("u"), F.col("id_a").alias("w")))
@@ -169,7 +166,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import two_phase_rank
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     per = (
         orders.select(
             F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
@@ -248,7 +245,7 @@ SELECT (SELECT cast(count(*) AS bigint) FROM names) AS n_rows,
     tags=("index", "text", "search"),
 )
 def q_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     names = part.select("p_partkey", "p_name")
     needles = _trgms(_TRGM_NEEDLE)
     post = names.select(
@@ -373,7 +370,7 @@ def ml_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.graph import connected_components
     from p6_spark.operators.similarity import lsh_candidate_vec_pairs
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
     )
@@ -384,22 +381,21 @@ def ml_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    eedges = (
+    # feeds sym, core filter, and the CC subgraph
+    eedges = materialize(
         cand.join(e.select(F.col("vec_id").alias("id_a"), "qv").alias("a"), "id_a")
         .join(e.select(F.col("vec_id").alias("id_b"), "qv").alias("b"), "id_b")
         .filter(d2 <= _DB_EPS2)
         .select("id_a", "id_b")
-        .localCheckpoint()  # feeds sym, core filter, and the CC subgraph
     )
     sym = eedges.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("w")
     ).unionAll(eedges.select(F.col("id_b").alias("u"), F.col("id_a").alias("w")))
-    core = (
+    core = materialize(
         sym.groupBy("u")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= _DB_MINPTS)
         .select(F.col("u").alias("vec_id"))
-        .localCheckpoint()
     )
     cce = eedges.join(
         core.select(F.col("vec_id").alias("id_a")), "id_a", "left_semi"
@@ -410,7 +406,7 @@ def ml_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", F.coalesce("component", F.col("vec_id")).alias("component")
     )
-    bord = (
+    bord = materialize(
         sym.join(core.select(F.col("vec_id").alias("u")), "u", "left_anti")
         .join(
             allcore.select(
@@ -420,7 +416,6 @@ def ml_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("u").alias("vec_id"))
         .agg(F.min("component").alias("component"))
-        .localCheckpoint()
     )
     core_rows = allcore.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_points")

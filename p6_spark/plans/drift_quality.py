@@ -21,10 +21,6 @@ from p6_spark.sources.tables import load_table
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # CUSUM drift detection over daily event counts
 # ---------------------------------------------------------------------------
@@ -67,7 +63,7 @@ ORDER BY event_type
     tags=("timeseries", "drift", "window", "fixed-point"),
 )
 def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.count(F.lit(1)).alias("x"))
@@ -138,7 +134,7 @@ FROM terms
     tags=("timeseries", "stats", "window", "fixed-point"),
 )
 def q_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("mo")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("x")
     )
@@ -208,7 +204,7 @@ ORDER BY t.event_type
     tags=("quality", "timeseries", "generator"),
 )
 def q_missing_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
     )
@@ -306,7 +302,7 @@ def dd_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens
 
     # fixed calibration panel — see the oracle doc note
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     sigs = dd.minhash_signatures(docs)
     pairs = dd.lsh_candidate_pairs(sigs)
     sa = sigs.select(
@@ -423,7 +419,7 @@ FROM interp GROUP BY user_id ORDER BY user_id
     tags=("window", "timeseries", "gapfill", "fixed-point"),
 )
 def q_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.filter(F.col("user_id") < 10)
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket"))
@@ -535,7 +531,7 @@ ORDER BY bin
     tags=("drift", "ml", "quality", "fixed-point"),
 )
 def dd_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     halves = ev.select(
         F.round(F.col("value") * 1000000, 0).cast("long").alias("v"),
         F.when(

@@ -17,10 +17,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Bounded BFS over the LSH candidate graph
 # ---------------------------------------------------------------------------
@@ -86,7 +82,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
     from p6_spark.operators.graph import bfs_hops
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # max_bucket=20: same degenerate-bucket guard as q_graph_kcore
     pairs = dd.lsh_candidate_pairs(dd.minhash_signatures(docs), max_bucket=20)
     dist = bfs_hops(pairs, seed_mod=10, max_hops=4)
@@ -135,7 +131,7 @@ ORDER BY event_type, day
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -208,7 +204,7 @@ ORDER BY id_a, id_b
 def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     sh = docs.select(
         "doc_id",
         F.explode(F.array_distinct(dd.word_shingles(F.col("text"), 3))).alias("sh"),
@@ -284,7 +280,7 @@ FROM (SELECT {lhs}, count(DISTINCT {rhs}) AS d FROM {tbl} GROUP BY {lhs})"""
 def q_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for tbl, lhs, rhs in _FD_CANDIDATES:
-        df = _t(spark, sf_dir, tbl)
+        df = load_table(spark, sf_dir, tbl)
         g = df.groupBy(lhs).agg(F.countDistinct(rhs).alias("d"))
         row = g.agg(
             F.count(F.lit(1)).cast("long").alias("n_groups"),
@@ -354,7 +350,7 @@ ORDER BY cluster_key
     tags=("dedup", "er", "survivorship", "window"),
 )
 def dd_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
     )
@@ -446,7 +442,7 @@ ORDER BY user_id, event_id
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_ewma16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
         "event_id",

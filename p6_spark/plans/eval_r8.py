@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
@@ -299,7 +300,7 @@ def _bt_mm(sided: DataFrame) -> DataFrame:
     degenerate-input gate (tests/test_advice_r8.py) can feed it a panel
     with truncated-to-zero win rates directly."""
     # the 2x|pairs| sided table feeds totals + two MM iterations: cut once
-    sided = sided.localCheckpoint()
+    sided = materialize(sided)
     totals = sided.groupBy("t").agg(
         F.sum("wins").cast("long").alias("w_total"),
         F.sum("n_games").cast("long").alias("games"),
@@ -437,20 +438,22 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("conf_x1e6").alias("sum_conf"),
         F.sum("y").cast("long").alias("n_pos"),
     )
-    gaps = per_bin.select(
-        "bin",
-        "n",
-        F.expr("sum_conf div n").alias("mean_conf_x1e6"),
-        F.expr(
-            "(cast(n_pos as decimal(38,0)) * 1000000) div n"
-        ).alias("acc_x1e6"),
-    ).select(
-        "bin",
-        "n",
-        "mean_conf_x1e6",
-        "acc_x1e6",
-        F.abs(F.col("mean_conf_x1e6") - F.col("acc_x1e6")).alias("gap_x1e6"),
-    ).localCheckpoint()  # feeds the ECE aggregate AND the projection
+    gaps = materialize(
+        per_bin.select(
+            "bin",
+            "n",
+            F.expr("sum_conf div n").alias("mean_conf_x1e6"),
+            F.expr(
+                "(cast(n_pos as decimal(38,0)) * 1000000) div n"
+            ).alias("acc_x1e6"),
+        ).select(
+            "bin",
+            "n",
+            "mean_conf_x1e6",
+            "acc_x1e6",
+            F.abs(F.col("mean_conf_x1e6") - F.col("acc_x1e6")).alias("gap_x1e6"),
+        )
+    )  # feeds the ECE aggregate AND the projection
     t = gaps.agg(
         F.expr(
             "sum(cast(n as decimal(38,0)) * gap_x1e6) div sum(n)"
@@ -528,7 +531,7 @@ FROM direct d, decomp dc, base b
 def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # feeds the direct pass AND the bin pass: cut once
-    binned = _cal_binned(li).localCheckpoint()
+    binned = materialize(_cal_binned(li))
     direct = binned.agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum("y").cast("long").alias("n_pos"),

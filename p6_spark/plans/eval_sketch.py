@@ -23,10 +23,6 @@ from p6_spark.sources.tables import load_table
 _SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # HyperLogLog with certified registers
 # ---------------------------------------------------------------------------
@@ -80,7 +76,7 @@ FROM summed, exact
     tags=("sketch", "agg", "fixed-point"),
 )
 def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     keys = orders.select(F.col("o_custkey").alias("key")).distinct()
     h = md5_int(F.concat(F.lit("hll_"), F.col("key").cast("string")))
     hashed = keys.select(h.alias("h")).select(
@@ -152,7 +148,7 @@ ORDER BY window_end
     tags=("timeseries", "distinct", "window"),
 )
 def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     activity = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     bounds = ev.agg(F.max(F.to_date("ts")).alias("dmax"))
     contrib = activity.select(
@@ -229,7 +225,7 @@ FROM chk
     tags=("stats", "nonparametric", "window", "fixed-point"),
 )
 def q_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     vals = ev.filter(F.col("event_type").isin("click", "purchase")).select(
         F.round(F.col("value") * 1000000, 0).cast("long").alias("v"),
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias("is_a"),
@@ -343,7 +339,7 @@ ORDER BY priority, status
     tags=("stats", "quality", "window", "fixed-point"),
 )
 def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cells = orders.groupBy(
         F.col("o_orderpriority").alias("rp"), F.col("o_orderstatus").alias("cs")
     ).agg(F.count(F.lit(1)).alias("o"))
@@ -458,7 +454,7 @@ ORDER BY cls
     tags=("ml", "evaluation", "fixed-point"),
 )
 def ml_prf_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pred = docs.select(
         F.col("lang").alias("actual_lang"),
         lang_id(F.col("text")).alias("predicted_lang"),

@@ -15,10 +15,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Split-gain feature importance
 # ---------------------------------------------------------------------------
@@ -76,7 +72,7 @@ FROM (
     tags=("ml", "feature", "window", "fixed-point"),
 )
 def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     out = None
     for name, expr in _FI_FEATURES:
         per_v = (
@@ -167,8 +163,8 @@ ORDER BY brand
     tags=("ml", "feature", "agg", "fixed-point"),
 )
 def ml_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     labeled = li.join(
         F.broadcast(part.select("p_partkey", F.col("p_brand").alias("brand"))),
         li.l_partkey == F.col("p_partkey"),
@@ -256,7 +252,7 @@ ORDER BY arm
     tags=("experiment", "stats", "fixed-point"),
 )
 def q_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cents = F.round(F.coalesce(F.col("value"), F.lit(0)) * 100, 0).cast("long")
     per_user = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("ts") < _CUPED_SPLIT_DAY, cents).otherwise(0)).alias("x"),

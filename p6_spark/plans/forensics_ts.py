@@ -15,10 +15,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Wald-Wolfowitz runs test on daily revenue direction
 # ---------------------------------------------------------------------------
@@ -70,7 +66,7 @@ FROM agg
     tags=("forensics", "stats", "window", "fixed-point"),
 )
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("cents")
     )
@@ -167,7 +163,7 @@ FROM late GROUP BY bucket ORDER BY bucket
 def q_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import md5_int
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
         "event_id",
@@ -257,7 +253,7 @@ FROM counts
     tags=("forensics", "experiment", "fixed-point"),
 )
 def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     assign = ev.select("user_id").distinct().select(
         ((F.col("user_id") * F.lit(2654435761)) % F.lit(4294967296) % 2).alias(
             "arm"

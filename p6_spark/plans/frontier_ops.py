@@ -10,16 +10,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.operators.text import md5_int
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 _SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +57,7 @@ ORDER BY brand, price_x100, partkey
     tags=("skyline", "window", "fixed-point"),
 )
 def q_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     pts = part.select(
         F.col("p_brand").alias("brand"),
         F.col("p_partkey").alias("partkey"),
@@ -185,12 +182,12 @@ ORDER BY hamming
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # one (doc_id, s) row per document — materialize: the blocked view
     # below feeds BOTH the cap aggregate and the pair join, and without
     # a cut the 62-vote signature aggregate executes twice (11.2s -> ~7s
     # at sf1.0)
-    sig = dd.simhash62_table(docs).withColumnRenamed("simhash", "s").localCheckpoint()
+    sig = materialize(dd.simhash62_table(docs).withColumnRenamed("simhash", "s"))
     blocked = sig.select(
         "doc_id",
         "s",
@@ -279,7 +276,7 @@ ORDER BY source, rnk
     tags=("sampling", "window", "dedup"),
 )
 def dd_reservoir_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "source",
         "doc_id",

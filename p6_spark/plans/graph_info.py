@@ -9,15 +9,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 _TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -93,10 +90,12 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
     from p6_spark.operators.graph import connected_components
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    pairs = dd.lsh_candidate_pairs(dd.minhash_signatures(docs)).select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    ).localCheckpoint()
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
+    pairs = materialize(
+        dd.lsh_candidate_pairs(dd.minhash_signatures(docs)).select(
+            F.col("id_a").alias("u"), F.col("id_b").alias("v")
+        )
+    )
     comp = connected_components(
         pairs.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
     ).select(F.col("node"), F.col("component").alias("community"))
@@ -200,7 +199,7 @@ def ml_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for label, tbl, ca, cb in specs:
         cells = (
-            _t(spark, sf_dir, tbl)
+            load_table(spark, sf_dir, tbl)
             .groupBy(ca.alias("va"), cb.alias("vb"))
             .agg(F.count(F.lit(1)).alias("n_xy"))
         )
@@ -268,7 +267,7 @@ ORDER BY doc_id, rnk
 def txt_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tok
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(_tok(F.col("text"))).alias("t"))
     tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     n = tok.agg(F.countDistinct("doc_id").alias("n_docs"))

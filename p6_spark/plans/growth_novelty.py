@@ -16,10 +16,6 @@ from p6_spark.sources.tables import load_table
 _TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Shingle novelty per ingestion decile
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ FROM marked GROUP BY decile ORDER BY decile
 def txt_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",
         F.explode(F.array_distinct(dd.word_shingles(F.col("text"), 3))).alias("sh"),
@@ -163,7 +159,7 @@ ORDER BY week
     tags=("bi", "growth", "window", "events"),
 )
 def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     uw = ev.select(
         "user_id",
         F.expr("unix_timestamp(ts) div 604800").alias("week"),
@@ -270,7 +266,7 @@ ORDER BY channel
     tags=("funnel", "attribution", "window"),
 )
 def q_attribution_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("p_id")
     )
@@ -365,7 +361,7 @@ ORDER BY coll_freq DESC, t
 def txt_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tok
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(_tok(F.col("text"))).alias("t"))
     per = tok.groupBy("t", "doc_id").agg(F.count(F.lit(1)).alias("x"))
     n = tok.agg(F.countDistinct("doc_id").alias("n_docs"))

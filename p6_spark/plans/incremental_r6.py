@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _SQL_TOKENS, _sql_bounded_cc, _sql_minhash_sig
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
@@ -128,7 +129,7 @@ def dd_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "is_batch", "band.band_idx", "band.band_val")
     # banded feeds three subtrees (corpus cap, corpus probe side, batch
     # probe side) — cut the lineage or the signature explode runs 3x
-    banded = banded.localCheckpoint()
+    banded = materialize(banded)
 
     corpus_small = (
         banded.filter(~F.col("is_batch"))
@@ -151,7 +152,7 @@ def dd_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    toks = dd.distinct_tokens(docs, "doc_id", "text").localCheckpoint()
+    toks = materialize(dd.distinct_tokens(docs, "doc_id", "text"))
     tsz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     inter = (
         cand.join(
@@ -432,10 +433,10 @@ def pipe_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(is_batch)
     corpus = docs.filter(~is_batch)
 
-    gated = ingest_filter(batch).select("doc_id", "content_md5").localCheckpoint()
+    gated = materialize(ingest_filter(batch).select("doc_id", "content_md5"))
     keep_min = gated.groupBy("content_md5").agg(F.min("doc_id").alias("doc_id"))
     cmd5 = corpus.select(F.md5("text").alias("content_md5")).distinct()
-    s2 = keep_min.join(cmd5, "content_md5", "left_anti").select("doc_id").localCheckpoint()
+    s2 = materialize(keep_min.join(cmd5, "content_md5", "left_anti").select("doc_id"))
 
     sigs = dd.minhash_signatures(docs)
     bands = F.array(
@@ -451,9 +452,11 @@ def pipe_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(4)
         ]
     )
-    banded = sigs.select(
-        "doc_id", is_batch.alias("is_batch"), F.explode(bands).alias("band")
-    ).select("doc_id", "is_batch", "band.band_idx", "band.band_val").localCheckpoint()
+    banded = materialize(
+        sigs.select(
+            "doc_id", is_batch.alias("is_batch"), F.explode(bands).alias("band")
+        ).select("doc_id", "is_batch", "band.band_idx", "band.band_val")
+    )
     corpus_small = (
         banded.filter(~F.col("is_batch"))
         .groupBy("band_idx", "band_val")
@@ -474,7 +477,7 @@ def pipe_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("b_id", "c_id")
         .distinct()
     )
-    toks = dd.distinct_tokens(docs, "doc_id", "text").localCheckpoint()
+    toks = materialize(dd.distinct_tokens(docs, "doc_id", "text"))
     tsz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     inter = (
         cand.join(toks.select(F.col("doc_id").alias("b_id"), "tok"), "b_id")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
@@ -926,7 +927,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.plans.eval_r8 import _cal_binned
 
     li = load_table(spark, sf_dir, "lineitem")
-    per_bin = (
+    # <= 10 rows; feeds three constant-size joins
+    per_bin = materialize(
         _cal_binned(li)
         .groupBy("bin")
         .agg(
@@ -934,7 +936,6 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("conf_x1e6").cast("long").alias("sum_conf"),
             F.sum("y").cast("long").alias("n_pos"),
         )
-        .localCheckpoint()  # <= 10 rows; feeds three constant-size joins
     )
     wcum = W.orderBy("bin").rowsBetween(W.unboundedPreceding, W.currentRow)
     cum = per_bin.select(

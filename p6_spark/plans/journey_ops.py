@@ -15,10 +15,6 @@ from p6_spark.sources.tables import load_table
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Top entry paths
 # ---------------------------------------------------------------------------
@@ -53,7 +49,7 @@ LIMIT 10
     tags=("funnel", "journey", "window"),
 )
 def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     wr = W.partitionBy("user_id").orderBy("ts", "event_id")
     first3 = ev.withColumn("rn", F.row_number().over(wr)).filter(F.col("rn") <= 3)
     paths = first3.groupBy("user_id").agg(
@@ -103,7 +99,7 @@ ORDER BY day
     tags=("timeseries", "journey", "window"),
 )
 def q_cumulative_adoption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("day"))
     per_day = first_seen.groupBy("day").agg(F.count(F.lit(1)).alias("n_new"))
     wc = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -182,7 +178,7 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
     from p6_spark.operators.text import tokens
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < _RECALL_SUBSET)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _RECALL_SUBSET)
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok")
     )

@@ -12,10 +12,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "ml_cohens_kappa",
     oracle="""
@@ -69,7 +65,7 @@ FROM chk
     tags=("ml", "eval", "fixed-point"),
 )
 def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = F.when(F.col("l_quantity") > 25, 1).otherwise(0)
     b = F.when(F.col("l_discount") >= 0.05, 1).otherwise(0)
     conf = li.select(a.alias("a"), b.alias("b")).agg(
@@ -156,7 +152,7 @@ ORDER BY p.prio
     tags=("timeseries", "window", "gaps-islands"),
 )
 def q_islands_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     days = (
         o.select(
             F.col("o_orderpriority").alias("prio"),

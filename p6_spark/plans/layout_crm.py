@@ -10,12 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +82,7 @@ FROM (
     tags=("layout", "stats", "window"),
 )
 def q_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     out = None
     specs = [
         ("l_returnflag", F.col("l_returnflag")),
@@ -174,7 +171,7 @@ LIMIT 25
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import ntile_from_rank, two_phase_rank
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     # The three ranks all consume the same per-customer aggregate; the
     # round-5 chained version re-executed the orders scan + groupBy once
     # per rank's internal min/max subtree (~5x, an 11.7x bench
@@ -183,7 +180,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each rank; the ranks then run independently off the cached base
     # and join back on the customer key.
     r_expr = F.unix_date(F.col("last_order").cast("date"))
-    base = (
+    base = materialize(
         orders.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -192,17 +189,18 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "monetary"
             ),
         )
-        .localCheckpoint()
     )
-    stats = base.agg(
-        F.min(r_expr).alias("r_lo"),
-        F.max(r_expr).alias("r_hi"),
-        F.min("freq").alias("f_lo"),
-        F.max("freq").alias("f_hi"),
-        F.min("monetary").alias("m_lo"),
-        F.max("monetary").alias("m_hi"),
-        F.count(F.lit(1)).alias("n_cust"),
-    ).localCheckpoint()
+    stats = materialize(
+        base.agg(
+            F.min(r_expr).alias("r_lo"),
+            F.max(r_expr).alias("r_hi"),
+            F.min("freq").alias("f_lo"),
+            F.max("freq").alias("f_hi"),
+            F.min("monetary").alias("m_lo"),
+            F.max("monetary").alias("m_hi"),
+            F.count(F.lit(1)).alias("n_cust"),
+        )
+    )
 
     def bnd(lo: str, hi: str) -> DataFrame:
         return stats.select(
@@ -312,7 +310,7 @@ def q_key_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = None
     for name, tbl, key in _GAP_SEQUENCES:
-        k = _t(spark, sf_dir, tbl).select(F.col(key).alias("k")).distinct()
+        k = load_table(spark, sf_dir, tbl).select(F.col(key).alias("k")).distinct()
         ranked = two_phase_rank(k, [F.asc("k")], F.col("k"))
         nxt = ranked.select(
             (F.col("rn") - 1).alias("rn"), F.col("k").alias("nk")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.operators import dedup as dd
 from p6_spark.operators import similarity as sim
 from p6_spark.operators.text import STOPWORDS, fingerprint, lang_id, tokens
@@ -1022,7 +1023,7 @@ def pipe_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact-dedup survivors feed BOTH the LSH-pairs subtree and the
     # left side of the greedy anti-join inside drop_near_duplicates —
     # cut the lineage once or scan+gate+exact-dedup executes twice
-    exact = dedup_exact(quality_gate(docs)).localCheckpoint()
+    exact = materialize(dedup_exact(quality_gate(docs)))
     return enrich(drop_near_duplicates(exact)).orderBy("doc_id")
 
 
@@ -2651,10 +2652,9 @@ def q_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1.0 — the cells are identical because summing per-token counts
     # into a cell equals counting occurrences). Checkpointed: it feeds
     # both the cells subtree and the top-20.
-    cnt = (
+    cnt = materialize(
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("true_count"))
-        .localCheckpoint()
     )
     expanded = cnt.select(
         "true_count", F.explode(rows4).alias("row_idx"), "token"
@@ -3426,10 +3426,9 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = dd.minhash_signatures(docs)
     # localCheckpoint: pairs is referenced 4x (e1/e2/e3/stats) — truncate
     # the LSH lineage once instead of re-executing it per reference
-    pairs = (
+    pairs = materialize(
         dd.lsh_candidate_pairs(sigs, max_bucket=20)
         .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .localCheckpoint()
     )
     deg = (
         pairs.select(F.col("u").alias("node"))

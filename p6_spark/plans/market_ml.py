@@ -10,13 +10,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +55,7 @@ LIMIT 20
     tags=("mining", "join", "fixed-point"),
 )
 def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     items = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     ).distinct()
@@ -165,21 +162,25 @@ ORDER BY decile
 def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import ntile_from_rank, two_phase_rank
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # lineage cut + single bounds aggregate: the rank's internal min/max
     # subtree and the n_tot attach would otherwise each re-execute the
     # events scan + groupBy (the q_rfm_segments round-5 regression class)
-    users = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("score"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "converted"
-        ),
-    ).localCheckpoint()
-    stats = users.agg(
-        F.min("score").alias("_tpr_lo"),
-        F.max("score").alias("_tpr_hi"),
-        F.count(F.lit(1)).alias("n_tot"),
-    ).localCheckpoint()
+    users = materialize(
+        ev.groupBy("user_id").agg(
+            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("score"),
+            F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
+                "converted"
+            ),
+        )
+    )
+    stats = materialize(
+        users.agg(
+            F.min("score").alias("_tpr_lo"),
+            F.max("score").alias("_tpr_hi"),
+            F.count(F.lit(1)).alias("n_tot"),
+        )
+    )
     ranked = two_phase_rank(
         users,
         [F.desc("score"), F.asc("user_id")],
@@ -284,7 +285,7 @@ ORDER BY subspace
     tags=("similarity", "quantization", "fixed-point"),
 )
 def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     e = emb.select("vec_id", v.alias("v"))
     code_cols = []
@@ -393,7 +394,7 @@ ORDER BY query_id, rnk
 def sim_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import two_phase_rank
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     e = emb.select("vec_id", v.alias("v"))
 
@@ -556,7 +557,7 @@ def dd_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
     # fixed tuning panel — see the oracle doc note
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     sigs = dd.minhash_signatures(docs).cache()
     sa = sigs.select(
         F.col("doc_id").alias("id_a"),

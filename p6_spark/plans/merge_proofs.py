@@ -22,10 +22,6 @@ _HLL_M = 256
 _HLL_ALPHA_X1E6 = 718273  # 0.7213 / (1 + 1.079/256), same literal as eval_sketch
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # HLL merge = direct: the mergeability theorem, certified
 # ---------------------------------------------------------------------------
@@ -86,7 +82,7 @@ FROM summed
 def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import md5_int
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     k = docs.select("source", F.md5("text").alias("key")).distinct()
     h = k.select(
         "source", md5_int(F.concat(F.lit("hllm_"), F.col("key"))).alias("hv")
@@ -178,7 +174,7 @@ ORDER BY id_a, id_b
     tags=("multimodal", "dedup", "hamming"),
 )
 def mm_chunk_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").filter(
+    docs = load_table(spark, sf_dir, "documents").filter(
         F.col("n_chars") >= _CHUNKS * _CHUNK_LEN
     )
     blocks = [
@@ -266,7 +262,7 @@ FROM s
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cnt = (
         docs.select(F.explode(_tokens(F.col("text"))).alias("t"))
         .groupBy("t")
@@ -336,7 +332,7 @@ FROM n, hs, hl
     tags=("text", "stats", "mixture", "fixed-point"),
 )
 def q_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n = docs.agg(F.count(F.lit(1)).alias("nt"))
 
     def _h(col: str):

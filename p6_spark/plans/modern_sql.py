@@ -20,10 +20,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _RECURSIVE_SPARK = """
 WITH RECURSIVE yrs(y) AS (
   SELECT {lo_y} AS y
@@ -82,7 +78,7 @@ ORDER BY month
     tags=("recursive", "cte", "date"),
 )
 def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders")
     b = orders.agg(
         F.min("o_orderdate").alias("lo"), F.max("o_orderdate").alias("hi")
@@ -117,7 +113,7 @@ ORDER BY event_type
     tags=("variant", "json", "agg"),
 )
 def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
     return (
         ev.select("event_type", k.alias("k"))
@@ -153,7 +149,7 @@ ORDER BY yr
     tags=("date", "interval", "agg"),
 )
 def q_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(F.year("o_orderdate").alias("yr"))
         .agg(
@@ -204,7 +200,7 @@ ORDER BY t.label
     tags=("collation", "join", "sql-surface"),
 )
 def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
+    load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(_COLLATION_SPARK)
 
 
@@ -263,7 +259,7 @@ ORDER BY o_orderpriority
     tags=("window", "navigation"),
 )
 def q_window_nav2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_WINDOW_NAV_SPARK)
 
 
@@ -317,7 +313,7 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     lim = 1_800_000_000  # 30 min in microseconds
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     m = ev.select(
         "user_id",
         "event_id",

@@ -10,12 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -60,9 +57,9 @@ LIMIT 10
     tags=("bi", "decomposition", "agg", "fixed-point"),
 )
 def q_contribution_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     per = (
         orders.filter(F.year("o_orderdate").isin(1996, 1997))
@@ -156,7 +153,7 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = _PA_TARGET_MB * 1048576
     out = None
     for tbl, expr in specs:
-        df = _t(spark, sf_dir, tbl)
+        df = load_table(spark, sf_dir, tbl)
         row = df.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.expr(expr)).alias("est_bytes"),
@@ -211,10 +208,10 @@ ORDER BY region, nation
     tags=("bi", "hierarchy", "window", "fixed-point"),
 )
 def q_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     rev = (
         orders.join(
             F.broadcast(cust.select("c_custkey", "c_nationkey")),
@@ -377,8 +374,8 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from p6_spark.operators.text import md5_int
 
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.select("vec_id", quantize(F.col("embedding")).alias("qv")).localCheckpoint()
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = materialize(emb.select("vec_id", quantize(F.col("embedding")).alias("qv")))
     # One seed collect serves all three k: the (md5_int(id), id) seed
     # order is a fixed total order, so seeds(k) is a prefix of seeds(8)
     # (round-11; previously 3 seed scans + 6 Lloyd jobs re-read parquet

@@ -23,10 +23,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Goodman-Kruskal gamma: ordinal association without a sqrt
 # ---------------------------------------------------------------------------
@@ -71,7 +67,7 @@ ORDER BY flag
     tags=("stats", "ordinal", "fixed-point"),
 )
 def q_kendall_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = (
         li.select(
             F.col("l_returnflag").alias("flag"),
@@ -167,7 +163,7 @@ ORDER BY grp
     tags=("ml", "eval", "fixed-point"),
 )
 def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_score = (
         li.select(
             F.col("l_linestatus").alias("grp"),
@@ -258,7 +254,7 @@ ORDER BY prio
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(
             F.col("o_orderpriority").alias("prio"),
@@ -348,7 +344,7 @@ ORDER BY prio
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(
             F.col("o_orderpriority").alias("prio"),
@@ -445,7 +441,7 @@ ORDER BY month
     tags=("timeseries", "window", "fixed-point"),
 )
 def q_rsi14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(
             F.date_trunc("day", "o_orderdate").alias("day"),
@@ -535,7 +531,7 @@ LIMIT 20
 def q_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
     ).distinct()

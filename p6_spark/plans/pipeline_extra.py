@@ -10,14 +10,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -66,7 +63,7 @@ ORDER BY m.k
 def txt_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
@@ -84,7 +81,7 @@ def txt_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy("rnk").rowsBetween(W.unboundedPreceding, W.currentRow))
         .alias("cum_cnt"),
     )
-    marks = _t(spark, sf_dir, "documents").sparkSession.createDataFrame(
+    marks = load_table(spark, sf_dir, "documents").sparkSession.createDataFrame(
         [(10,), (30,), (100,), (300,), (1000,)], "k int"
     )
     return (
@@ -142,7 +139,7 @@ ORDER BY fold, label
     tags=("ml", "sampling", "fixed-point"),
 )
 def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     folded = emb.select(
         "label",
         ((F.col("vec_id") * 2654435761) % 4294967296 % 5).cast("int").alias("fold"),
@@ -216,7 +213,7 @@ ORDER BY a.channel
     tags=("funnel", "attribution", "asof", "window"),
 )
 def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("p_id")
     )
@@ -332,13 +329,13 @@ def pipe_drop_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
     from p6_spark.pipelines.llm_corpus import drop_near_duplicates, quality_gate
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # each stage output feeds BOTH its per-source rollup and the next
     # stage (and the near-dup stage reads its input twice: LSH subtree +
     # anti-join) — without the cuts, scan+gate executes ~5x and exact
     # dedup ~4x
-    gated = quality_gate(docs).localCheckpoint()
-    exact = dd.dedup_exact(gated).localCheckpoint()
+    gated = materialize(quality_gate(docs))
+    exact = materialize(dd.dedup_exact(gated))
     clean = drop_near_duplicates(exact)
 
     def per_source(df: DataFrame, name: str) -> DataFrame:

@@ -16,10 +16,6 @@ from p6_spark.sources.tables import load_table
 _MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # k-anonymity / l-diversity
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ FROM qi
     tags=("privacy", "forensics", "agg"),
 )
 def q_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     band = (
         F.when(F.col("c_acctbal") < 0, "neg")
         .when(F.col("c_acctbal") < 5000, "mid")
@@ -127,7 +123,7 @@ ORDER BY c_nationkey
 def q_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import md5_int
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     counts = cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n"))
     noise = counts.withColumn(
         "u",

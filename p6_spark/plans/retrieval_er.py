@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.operators.text import md5_int, tokens
 from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
@@ -20,10 +21,6 @@ from p6_spark.sources.tables import load_table
 
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 _SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +70,7 @@ ORDER BY jacc_x1e6 DESC, doc_a, doc_b
     tags=("dedup", "er", "window", "fixed-point"),
 )
 def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         "n_chars",
@@ -153,7 +150,7 @@ LIMIT 20
     tags=("text", "index", "agg"),
 )
 def txt_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     posting = docs.select(
         F.explode(tokens(F.col("text"))).alias("token"), "doc_id"
     )
@@ -239,8 +236,8 @@ ORDER BY c_mktsegment
     tags=("dedup", "bloom", "join", "scale"),
 )
 def dd_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
 
     def bloom_positions(key: F.Column) -> F.Column:
         return F.array(
@@ -384,7 +381,7 @@ SELECT * FROM (
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # localCheckpoint (the pagerank pattern): every unrolled round
     # references the previous edge set 3x (degree agg + 2 semi joins)
     # and the stats union re-references all of them, so without lineage
@@ -396,10 +393,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multiply-referenced un-persisted frame — the scheme behind the
     # driver's 32-core regression. Blocks land before round 1 reads
     # them; the semi joins plan as plain exchange joins again.
-    edges = (
+    edges = materialize(
         dd.lsh_candidate_pairs(dd.minhash_signatures(docs), max_bucket=20)
         .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .localCheckpoint()
     )
     stats = []
     cur = edges
@@ -411,11 +407,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= 2).select("node")
-        cur = (
+        cur = materialize(
             cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint()
         )
         stats.append(
             keep.agg(F.count(F.lit(1)).alias("n_nodes"))

@@ -10,14 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 _TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +80,7 @@ LIMIT 20
 def txt_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import tokens as _tok
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(_tok(F.col("text"))).alias("t"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -209,7 +206,7 @@ ORDER BY v.i
     tags=("ml", "linalg", "iterative", "fixed-point"),
 )
 def ml_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 10000, 0).cast("long")
     )
@@ -226,14 +223,13 @@ def ml_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.expr("transform(tail, x -> x * vi)")).alias("dj", "p"),
     ).select("i", (F.col("i") + F.col("dj")).alias("j"), "p")
     gram = prods.groupBy("i", "j").agg(F.sum("p").alias("gram"))
-    gramf = (
+    # the expensive embeddings scan happens once; iterations reuse it
+    gramf = materialize(
         gram.unionAll(
             gram.filter(F.col("i") != F.col("j")).select(
                 F.col("j").alias("i"), F.col("i").alias("j"), "gram"
             )
         )
-        # the expensive embeddings scan happens once; iterations reuse it
-        .localCheckpoint()
     )
     v = spark.range(1, 65).select(
         F.col("id").alias("i"), F.lit(_PI_SCALE).cast("long").alias("v")
@@ -330,7 +326,7 @@ FROM s GROUP BY own ORDER BY label
     tags=("ml", "clustering", "similarity", "fixed-point"),
 )
 def ml_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 10000, 0).cast("long")
     )
@@ -463,7 +459,7 @@ def sim_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_centroids_fixed,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     # Round-11 A/B note: materializing a quantized projection +
     # checkpointing `indexed` (the ml_kmeans_elbow treatment) was
     # tried and measured 1.44x SLOWER here (sf0.1 min-of-3): the three

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.llm_ops import _SQL_TOKENS, _sql_bounded_cc, _sql_minhash_sig
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
@@ -349,11 +350,11 @@ def ml_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_nr") == 3)
         .select("l_orderkey")
     )
-    cells = (
+    # small; feeds two independent rollups
+    cells = materialize(
         r3.join(items, "l_orderkey")
         .groupBy("l_orderkey", "cat")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # small; feeds two independent rollups
     )
     s = cells.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_items"),
@@ -858,7 +859,7 @@ def dd_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(docs)
-    pairs = dd.lsh_candidate_pairs(sigs, max_bucket=20).localCheckpoint()
+    pairs = materialize(dd.lsh_candidate_pairs(sigs, max_bucket=20))
     cc = connected_components(pairs)
     comp_full = (
         docs.select("doc_id")
@@ -868,18 +869,20 @@ def dd_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
         )
     )
-    splits = comp_full.select(
-        "doc_id",
-        "component",
-        F.when(
-            md5_int(F.concat(F.lit("split_"), F.col("component").cast("string")))
-            % 10
-            < 9,
-            F.lit("train"),
+    splits = materialize(
+        comp_full.select(
+            "doc_id",
+            "component",
+            F.when(
+                md5_int(F.concat(F.lit("split_"), F.col("component").cast("string")))
+                % 10
+                < 9,
+                F.lit("train"),
+            )
+            .otherwise(F.lit("val"))
+            .alias("split"),
         )
-        .otherwise(F.lit("val"))
-        .alias("split"),
-    ).localCheckpoint()  # feeds the rollup AND both sides of the audit join
+    )  # feeds the rollup AND both sides of the audit join
     sa = splits.select(
         F.col("doc_id").alias("id_a"), F.col("split").alias("split_a")
     )

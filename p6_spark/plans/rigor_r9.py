@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.eval_r8 import _SQL_MATCH_CTES, _pair_counts
 from p6_spark.plans.registry import register
 from p6_spark.plans.scalar_bounds import (
@@ -254,7 +255,8 @@ ORDER BY f.cls
 )
 def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    cells = (
+    # tiny (<= 9 rows); feeds three class rollups
+    cells = materialize(
         li.select(
             F.expr(
                 "CASE WHEN l_quantity < 17 THEN 'low'"
@@ -267,7 +269,6 @@ def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("truth", "pred")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # tiny (<= 9 rows); feeds three class rollups
     )
     classes = (
         cells.select(F.col("truth").alias("cls"))
@@ -299,31 +300,33 @@ def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("fn"),
         )
     )
-    f = per.select(
-        "cls",
-        "tp",
-        "fp",
-        "fn",
-        F.expr(
-            "CASE WHEN tp + fp = 0 THEN 0"
-            " ELSE (tp * cast(1000000 as bigint)) div (tp + fp) END"
-        ).alias("prec_x1e6"),
-        F.expr(
-            "CASE WHEN tp + fn = 0 THEN 0"
-            " ELSE (tp * cast(1000000 as bigint)) div (tp + fn) END"
-        ).alias("rec_x1e6"),
-    ).select(
-        "cls",
-        "tp",
-        "fp",
-        "fn",
-        "prec_x1e6",
-        "rec_x1e6",
-        F.expr(
-            "CASE WHEN prec_x1e6 + rec_x1e6 = 0 THEN 0"
-            " ELSE (2 * prec_x1e6 * rec_x1e6) div (prec_x1e6 + rec_x1e6) END"
-        ).alias("f1_x1e6"),
-    ).localCheckpoint()  # feeds the macro mean AND the projection
+    f = materialize(
+        per.select(
+            "cls",
+            "tp",
+            "fp",
+            "fn",
+            F.expr(
+                "CASE WHEN tp + fp = 0 THEN 0"
+                " ELSE (tp * cast(1000000 as bigint)) div (tp + fp) END"
+            ).alias("prec_x1e6"),
+            F.expr(
+                "CASE WHEN tp + fn = 0 THEN 0"
+                " ELSE (tp * cast(1000000 as bigint)) div (tp + fn) END"
+            ).alias("rec_x1e6"),
+        ).select(
+            "cls",
+            "tp",
+            "fp",
+            "fn",
+            "prec_x1e6",
+            "rec_x1e6",
+            F.expr(
+                "CASE WHEN prec_x1e6 + rec_x1e6 = 0 THEN 0"
+                " ELSE (2 * prec_x1e6 * rec_x1e6) div (prec_x1e6 + rec_x1e6) END"
+            ).alias("f1_x1e6"),
+        )
+    )  # feeds the macro mean AND the projection
     m = f.agg(F.expr("cast(sum(f1_x1e6) div count(*) as bigint)").alias("macro_f1_x1e6"))
     return (
         f.crossJoin(F.broadcast(m))

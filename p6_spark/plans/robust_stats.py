@@ -22,10 +22,6 @@ _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')
 _SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Weighted median
 # ---------------------------------------------------------------------------
@@ -66,7 +62,7 @@ ORDER BY flag
     tags=("stats", "robust", "window", "fixed-point"),
 )
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_returnflag").alias("flag"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("price_x100"),
@@ -161,7 +157,7 @@ FROM chk
     tags=("stats", "drift", "window", "fixed-point"),
 )
 def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.round(F.col("value") * 1000000, 0).cast("long").alias("v")
     a = ev.filter(F.col("event_type") == "click").select(v)
     b = ev.filter(F.col("event_type") == "purchase").select(v)
@@ -289,8 +285,8 @@ ORDER BY segment
     tags=("stats", "bi", "window", "fixed-point"),
 )
 def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     per_cust = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
@@ -362,9 +358,9 @@ ORDER BY nation
     tags=("stats", "bi", "agg", "fixed-point"),
 )
 def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nat = load_table(spark, sf_dir, "nation")
     rev = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
     ).cast("long")
@@ -429,7 +425,7 @@ ORDER BY digit
     tags=("quality", "forensics", "agg", "fixed-point"),
 )
 def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     digits = orders.filter(F.col("o_totalprice") > 0).select(
         F.substring(
             F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"), 1, 1
@@ -439,7 +435,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     obs = digits.groupBy("d").agg(F.count(F.lit(1)).alias("n_obs"))
     obs = obs.withColumn("n_tot", F.sum("n_obs").over(W.partitionBy()))
-    expected = _t(spark, sf_dir, "orders").sparkSession.createDataFrame(
+    expected = load_table(spark, sf_dir, "orders").sparkSession.createDataFrame(
         sorted(_BENFORD_X1E6.items()), "d int, exp_x1e6 bigint"
     )
     return (
@@ -508,7 +504,7 @@ ORDER BY doc_id
     tags=("text", "ml", "hashing", "fixed-point"),
 )
 def txt_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     hashed = toks.select(
         "doc_id",

@@ -11,6 +11,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize
 from p6_spark.plans import llm_ops  # noqa: F401  (registers pipe_llm_corpus)
 from p6_spark.plans.registry import QUERIES, register
 from p6_spark.sources.tables import load_table
@@ -68,6 +69,6 @@ def pipe_sharded_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver. Each shard's ingest still runs independently before
     # the union (the merge math is untouched); at 100 TB the shard
     # outputs are separate materialized writes either way.
-    merged = reduce(DataFrame.unionAll, per_shard).localCheckpoint()
-    global_clean = dedup_exact(merged).localCheckpoint()  # keep-min is associative
+    merged = materialize(reduce(DataFrame.unionAll, per_shard))
+    global_clean = materialize(dedup_exact(merged))  # keep-min is associative
     return enrich(drop_near_duplicates(global_clean)).orderBy("doc_id")

@@ -16,10 +16,6 @@ from p6_spark.sources.tables import load_table
 _MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Continuous aggregate: partials for history + raw tail, served as one view
 # ---------------------------------------------------------------------------
@@ -51,7 +47,7 @@ ORDER BY o_orderpriority
 def q_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.incremental import daily_order_partials
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     closed = orders.filter(F.col("o_orderdate") < _CAGG_CUTOVER)
     tail = orders.filter(F.col("o_orderdate") >= _CAGG_CUTOVER)
     hist = (
@@ -113,8 +109,8 @@ FROM {child} c WHERE NOT EXISTS (
 def q_ri_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for child, fk, parent, pk in _RI_RELATIONS:
-        c = _t(spark, sf_dir, child)
-        p = _t(spark, sf_dir, parent).select(F.col(pk).alias(fk))
+        c = load_table(spark, sf_dir, child)
+        p = load_table(spark, sf_dir, parent).select(F.col(pk).alias(fk))
         total = c.agg(F.count(F.lit(1)).alias("n_child_rows"))
         orphans = c.join(p, fk, "left_anti").agg(
             F.count(F.lit(1)).alias("n_orphan_rows"),
@@ -214,14 +210,14 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for name, ta, ka, tb, kb in pairs:
         tagged = (
-            _t(spark, sf_dir, ta)
+            load_table(spark, sf_dir, ta)
             .select(
                 F.col(ka).alias("k"),
                 F.lit(1).alias("in_a"),
                 F.lit(0).alias("in_b"),
             )
             .unionAll(
-                _t(spark, sf_dir, tb).select(
+                load_table(spark, sf_dir, tb).select(
                     F.col(kb).alias("k"),
                     F.lit(0).alias("in_a"),
                     F.lit(1).alias("in_b"),

@@ -14,10 +14,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Welch's unequal-variance t-test, sqrt-free via t^2
 # ---------------------------------------------------------------------------
@@ -88,7 +84,7 @@ FROM scaled
     tags=("stats", "hypothesis-test", "fixed-point"),
 )
 def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("long")
     is1 = F.col("l_linestatus") == "O"
     is2 = F.col("l_linestatus") == "F"

@@ -15,10 +15,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Mergeable fixed-grid histogram sketch: merge == direct, quantiles vs exact
 # ---------------------------------------------------------------------------
@@ -90,7 +86,7 @@ ORDER BY pct
     tags=("sketch", "merge", "percentile", "fixed-point"),
 )
 def q_histogram_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     v = orders.select(
         F.col("o_orderpriority").alias("src"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
@@ -211,7 +207,7 @@ FROM d
     tags=("ml", "agg", "fixed-point"),
 )
 def ml_linreg2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_quantity").cast("long").alias("x1"),
         F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
@@ -333,7 +329,7 @@ FROM (
     tags=("ml", "stats", "fixed-point"),
 )
 def ml_linreg2_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_quantity").cast("long").alias("x1"),
         F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
@@ -460,7 +456,7 @@ FROM rated GROUP BY verdict ORDER BY verdict
     tags=("text", "quality", "routing", "fixed-point"),
 )
 def txt_code_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         F.length("text").alias("n_chars_s"),

@@ -17,10 +17,6 @@ from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Interval union (sweep-line): total covered time per user
 # ---------------------------------------------------------------------------
@@ -86,7 +82,7 @@ LIMIT 25
     tags=("timeseries", "window", "sweep-line"),
 )
 def q_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",
         "event_id",
@@ -198,7 +194,7 @@ ORDER BY prio
     tags=("stats", "inequality", "fixed-point"),
 )
 def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rows_ln = o.select(
         F.col("o_orderpriority").alias("prio"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),

@@ -15,13 +15,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from p6_spark.materialize import materialize
 from p6_spark.plans.core_relational import dsum
 from p6_spark.plans.registry import register
 from p6_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -45,13 +42,13 @@ LIMIT 20
     tags=("join", "agg", "topk"),
 )
 def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -86,8 +83,8 @@ FROM sums
     tags=("join", "agg", "ratio"),
 )
 def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,12)")
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(38,12)"))
     sums = (
@@ -132,8 +129,8 @@ ORDER BY s_suppkey
     tags=("agg", "subquery", "window"),
 )
 def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    sup = load_table(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
     )
@@ -166,11 +163,11 @@ LIMIT 50
     tags=("join", "distinct", "agg"),
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29)
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
@@ -196,8 +193,8 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 
     tags=("join", "filter", "pushdown"),
 )
 def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     q = F.col("l_quantity")
     cond = (
@@ -238,8 +235,8 @@ ORDER BY c_nationkey
     tags=("subquery", "anti", "agg"),
 )
 def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     bal = cust.select(
         "c_custkey",
         "c_nationkey",
@@ -298,7 +295,7 @@ ORDER BY l_returnflag
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.ranking import two_phase_rank
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # melt both value columns into ONE tall pass: a single shuffle and a
     # single two-phase prefix-sum serve all four quantiles
     tall = li.select(
@@ -312,10 +309,9 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, an ordinary hash shuffle with map-side partials;
     # three downstream subtrees (bucket bounds, main pass, per-group
     # totals) — cut the lineage or the aggregate re-executes per subtree
-    cnts = (
+    cnts = materialize(
         tall.groupBy("ck", "flag", "val")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     ranked = two_phase_rank(
         cnts,
@@ -378,7 +374,7 @@ ORDER BY returnflag, linestatus
     tags=("grouping-sets", "agg"),
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("li_gs")
     return spark.sql(
         """
@@ -429,13 +425,13 @@ ORDER BY yr
     tags=("join", "agg", "ratio", "star"),
 )
 def q08(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
-    sup = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
+    sup = load_table(spark, sf_dir, "supplier")
     cn = nation.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_rk")
     )
@@ -496,11 +492,11 @@ ORDER BY nation, yr DESC
     tags=("join", "agg", "like", "star"),
 )
 def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    sup = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
         "p_retailprice"
     ) * F.col("l_quantity") * F.lit(0.01)
@@ -541,9 +537,9 @@ WHERE qty_x100 * 5 * n < sum_qty_x100
     tags=("subquery", "join", "agg"),
 )
 def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "l_partkey",
@@ -588,7 +584,7 @@ ORDER BY l_returnflag
     tags=("percentile", "filter", "join"),
 )
 def q_outlier_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("li_trim")
     thresh = spark.sql(
         """
@@ -633,8 +629,8 @@ ORDER BY l_returnflag
     tags=("join", "agg", "conditional"),
 )
 def q12_late_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -683,12 +679,12 @@ ORDER BY numwait DESC, s_name
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders_f = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    sup = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    sup = load_table(spark, sf_dir, "supplier")
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     li_o = li.join(orders_f, li.l_orderkey == orders_f.o_orderkey).withColumn(
         "is_late", late
@@ -738,9 +734,9 @@ ORDER BY value_x1e4 DESC, partkey
     tags=("subquery", "agg", "scalar-broadcast"),
 )
 def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     value_x1e4 = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
     ).cast("long")
@@ -797,13 +793,13 @@ ORDER BY s_name
     tags=("subquery", "agg", "join", "like"),
 )
 def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    sup = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     qty_x100 = F.round(F.col("l_quantity") * 100, 0).cast("long")
     ps = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from p6_spark.materialize import materialize
+
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -262,13 +264,11 @@ def incremental_ingest_sink(
         .dropDuplicates(["content_md5"])
     )
     # static corpus derivatives, built ONCE and reused by every batch
-    cmd5 = (
-        corpus.select(F.md5("text").alias("content_md5")).distinct().localCheckpoint()
-    )
-    corpus_c = corpus.localCheckpoint()
+    cmd5 = materialize(corpus.select(F.md5("text").alias("content_md5")).distinct())
+    corpus_c = materialize(corpus)
 
     def _handle(bdf: DataFrame, epoch_id: int) -> None:
-        s2 = bdf.join(cmd5, "content_md5", "left_anti").localCheckpoint()
+        s2 = materialize(bdf.join(cmd5, "content_md5", "left_anti"))
         matched = (
             incremental_probe_stream(s2.select("doc_id", "text"), corpus_c, tau_x1e6)
             .filter(F.col("is_match"))

@@ -23,6 +23,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from oracle_utils import compare, run_oracle
+    from p6_spark.materialize import release
     from p6_spark.plans.registry import QUERIES, _load_all
 
     _load_all()
@@ -64,20 +65,8 @@ def main() -> int:
                 print(f"  - {p}")
         else:
             print(f"ok   {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-        # localCheckpoint blocks persist for the session; over a 269-query
-        # sweep they accumulate into storage-memory pressure that slowed
-        # late checkpoint-heavy queries ~10x (q_graph_modularity measured
-        # 124s in-sweep vs 12s standalone at sf1.0). The query is done —
-        # free its blocks before the next one. clearCache() is the public
-        # API (covers cached relations); the py4j getPersistentRDDs walk
-        # additionally reaches checkpoint RDD blocks but is version-
-        # brittle, so it is best-effort (ADVICE r6).
-        spark.catalog.clearCache()
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        # the query is done — free its blocks before the next one
+        release(spark)
     print(f"\n{len(names) - n_fail}/{len(names)} green")
     return 1 if n_fail else 0
 

@@ -23,6 +23,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from p6_spark.materialize import materialize  # noqa: E402
 from p6_spark.session import get_spark  # noqa: E402
 from p6_spark.sources.tables import load_table  # noqa: E402
 from p6_spark.streaming.corpus import (  # noqa: E402
@@ -35,31 +36,29 @@ def main() -> int:
     spark = get_spark("inc_probe_scale", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    batch = (
+    batch = materialize(
         load_table(spark, "/root/testdata/sf0.01", "documents")
         .filter(F.col("doc_id") % 4 == 0)
-        .localCheckpoint()
     )
     n_batch = batch.count()
 
     out = {"n_batch": n_batch, "cap_x_bands": 20 * 4, "panels": []}
     for sf_dir in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        corpus = (
+        corpus = materialize(
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 4 != 0)
             # shift ids so corpus never collides with the fixed batch ids
             .withColumn("doc_id", F.col("doc_id") + F.lit(10_000_000))
-            .localCheckpoint()
         )
         n_corpus = corpus.count()
 
         t0 = time.time()
-        index = corpus_band_index(corpus).localCheckpoint()
+        index = materialize(corpus_band_index(corpus))
         n_index = index.count()
         t_build = time.time() - t0
 
         t0 = time.time()
-        probed = incremental_probe_stream(batch, corpus).localCheckpoint()
+        probed = materialize(incremental_probe_stream(batch, corpus))
         n_cand = probed.count()
         n_match = probed.filter("is_match").count()
         t_probe = time.time() - t0

@@ -26,6 +26,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from p6_spark.materialize import release  # noqa: E402
 from p6_spark.session import get_spark  # noqa: E402
 
 PIPELINE = [
@@ -118,14 +119,7 @@ def main() -> None:
                 ),
                 "top_stages": top,
             }
-            spark.catalog.clearCache()
-            try:
-                for rdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    rdd.unpersist()
-            except Exception:
-                pass
+            release(spark)
         out["panels"][sf_dir] = panel
 
     # the cross-panel headline: top-3 memory queries and the

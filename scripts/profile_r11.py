@@ -38,6 +38,7 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
+    from p6_spark.materialize import release
     from p6_spark.plans import get_queries
     from p6_spark.session import get_spark
 
@@ -99,12 +100,7 @@ def main() -> None:
             if dt < best:
                 best, best_jobs, best_stages = dt, len(job_ids), n_stages
             sc.setJobGroup(None, None)
-            spark.catalog.clearCache()
-            try:
-                for rdd in sc._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
+            release(spark)
         results[name] = {
             "sec": round(best, 3),
             "jobs": best_jobs,

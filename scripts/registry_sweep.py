@@ -38,6 +38,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from oracle_utils import compare, run_oracle
+    from p6_spark.materialize import release
     from p6_spark.plans.registry import QUERIES, _load_all
 
     _load_all()
@@ -106,12 +107,7 @@ def main() -> int:
         rec["sec"] = round(time.time() - t0, 1)
         out["queries"][name] = rec
         # free checkpoint blocks between queries (the r6 sweep lesson)
-        spark.catalog.clearCache()
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        release(spark)
         if _SENTINEL_QUERY in builders and i in checkpoints:
             sentinel_samples.append(
                 measure_sentinel(spark, builders, args.sf)

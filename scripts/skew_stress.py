@@ -28,6 +28,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from p6_spark.materialize import materialize  # noqa: E402
 from p6_spark.session import get_spark  # noqa: E402
 
 CAP = 20
@@ -59,7 +60,7 @@ def main() -> None:
     for tag, d in panels:
         docs = spark.read.parquet(f"{d}/documents.parquet")
         n = docs.count()
-        sigs = dd.minhash_signatures(docs).localCheckpoint()
+        sigs = materialize(dd.minhash_signatures(docs))
         # banded-bucket occupancy (the quantity the cap acts on)
         bands = F.array(
             *[

@@ -194,3 +194,37 @@ def test_slim_stdout_line_fits_the_real_headline_shape():
     assert len(parsed["queries"]) == 60
     assert sum(1 for k in parsed if k.endswith("_total")) == 8
     assert parsed["sentinel"] == {"drift_ratio": 1.09, "noisy": False}
+
+
+def test_manifest_sections_partition_the_real_manifest():
+    """The one manifest loop that replaced the nine per-section readers
+    must keep every `<section>_total` field and its order: the real
+    manifest's sections in manifest order, each name owned by exactly
+    one section, sized as the frozen headline plus the rounds' appends."""
+    import bench
+
+    sections = bench.manifest_sections(get_queries())
+    assert {k: len(v) for k, v in sections.items()} == {
+        "headline": 60, "iterative": 6, "r6": 6, "r7": 4, "r8": 11,
+        "r9": 7, "r9b": 13, "r10": 3, "r11": 2,
+    }
+    assert list(sections) == [
+        "headline", "iterative", "r6", "r7", "r8", "r9", "r9b", "r10", "r11",
+    ]
+    assert sections["headline"] == bench.headline_names()
+    owned = [n for names in sections.values() for n in names]
+    assert len(owned) == len(set(owned))
+
+
+def test_manifest_sections_first_listing_wins(tmp_path, monkeypatch):
+    import bench
+
+    manifest = tmp_path / "manifest.json"
+    manifest.write_text(json.dumps({
+        "_doc": "scalars are not sections", "frozen_at_round": 4,
+        "headline": ["a", "b"], "iterative": ["b", "c", "gone"], "r6": ["c", "d"],
+    }))
+    monkeypatch.setattr(bench, "_MANIFEST", str(manifest))
+    assert bench.manifest_sections({"a", "b", "c", "d"}) == {
+        "headline": ["a", "b"], "iterative": ["c"], "r6": ["d"],
+    }

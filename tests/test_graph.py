@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from p6_spark.materialize import materialize, release
 from p6_spark.operators import dedup as dd
 from p6_spark.operators.graph import connected_components, dedup_clusters
 from p6_spark.sources.tables import load_table
@@ -152,19 +153,36 @@ def test_bfs_hops_matches_driver_bfs_on_lsh_pairs(spark, sf_dir):
         assert got[n] == want.get(n), n
 
 
-def test_cc_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
-    """Smoke test for the documented cluster-deployment swap (module
-    docstring): with P6_SPARK_RELIABLE_CHECKPOINT=1 and a checkpoint
-    dir set, every lineage cut goes through reliable
-    DataFrame.checkpoint() — results must be identical to the default
-    localCheckpoint mode, and the swap must stay compilable."""
+def test_cc_reliable_checkpoint_mode(spark, tmp_path):
+    """Smoke test for the documented cluster-deployment swap
+    (p6_spark/materialize.py): with a checkpoint dir set, every lineage
+    cut goes through reliable DataFrame.checkpoint() — results must be
+    identical to the default localCheckpoint mode, and the swap must
+    stay compilable. The dir is unset again afterwards, or every later
+    test in the shared session would cut reliably."""
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     want = _union_find(edges)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    monkeypatch.setenv("P6_SPARK_RELIABLE_CHECKPOINT", "1")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert list((tmp_path / "ckpt").glob("*/rdd-*"))  # cuts were reliable
     assert got == want
+
+
+def test_release_drains_materialized_blocks(spark):
+    """release() must leave no persistent RDD behind: its py4j walk is
+    best-effort (a swallowed exception), so only this check notices a
+    broken walk."""
+    materialize(spark.range(100))
+    jsc = spark.sparkContext._jsc
+    assert len(jsc.getPersistentRDDs()) > 0
+    release(spark)
+    assert len(jsc.getPersistentRDDs()) == 0
 
 
 def _sync_min_label_rounds(edges, rounds):
