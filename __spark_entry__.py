@@ -70,28 +70,6 @@ _ANCHORS = [
 _FIXED_N = len(_ANCHORS)
 _ROTATING_N = 45
 
-# Round 12 (VERDICT r11 item 4): queries whose CODE changed in the two
-# optimization rounds but which the r11 driver sample missed, plus the
-# consumers of this round's iterative-scheme fix — sorted to the FRONT
-# of the rotating window so the driver re-certifies exactly the changed
-# code (scrutiny-positive: these are our own rewrites). The remaining
-# slots keep the coverage-aware never-certified-first order. Drop this
-# list next round once CORRECTNESS_r12.json records them.
-_PRIORITY = [
-    # r11 rewrites the r11 rotation missed (VERDICT r11 item 4)
-    "q_market_basket", "q_join_size_estimate", "dd_substring_spans",
-    "pipe_sharded_merge", "sim_ivf_ann", "sim_ivfpq_search",
-    "sim_pq_search", "ml_kmeans_elbow",
-    # r12 fix: every consumer of the reverted iterative scheme
-    "q_graph_pagerank", "q_graph_bfs", "q_graph_kcore",
-    "q_graph_cheapest_path", "q_graph_modularity", "dd_cc_clusters",
-    "dd_semantic_dedup", "dd_segment_dedup", "dd_cluster_best",
-    "dd_split_leakage", "dd_leakage_safe_split", "ml_dbscan_clusters",
-    "dd_embedding_neardup", "dd_incremental_neardup",
-    "pipe_incremental_ingest", "mm_features", "pipe_post_dedup_mixture",
-    "q_graph_link_predict",
-]
-
 
 def _current_round() -> int:
     import glob
@@ -137,14 +115,9 @@ def proposed_sample(round_no: int | None = None) -> list[str]:
     fixed = [n for n in _ANCHORS if n in names]
     rest = [n for n in names if n not in _ANCHORS]
     certified = _certified_names()
-    priority = set(_PRIORITY)
     rotating = sorted(
         rest,
-        key=lambda n: (
-            n not in priority,
-            n in certified,
-            hashlib.md5(f"{rn}:{n}".encode()).hexdigest(),
-        ),
+        key=lambda n: (n in certified, hashlib.md5(f"{rn}:{n}".encode()).hexdigest()),
     )[:_ROTATING_N]
     return fixed + rotating
 

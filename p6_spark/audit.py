@@ -66,23 +66,11 @@ class StageResult:
     audit: DataFrame
 
 
-def split_on(
-    df: DataFrame, predicate: Column, step: str, sheet: str, message: Column
-) -> StageResult:
-    """Dead-letter split: rows passing `predicate` survive; the rest
-    become 'error' audit rows (row dropped, run continues)."""
-    ok = df.filter(predicate)
-    bad = audit_from_rows(df, ~predicate, step, sheet, "error", message)
-    return StageResult(valid=ok, audit=bad)
-
-
 def dead_letter_rows(df: DataFrame, predicate: Column) -> tuple[DataFrame, DataFrame]:
     """Schema-preserving dead-letter split: (valid, dead), both with the
     ORIGINAL columns — for callers that aggregate the dead side (per-key
     rejection counts in a curation manifest) instead of, or before,
     rendering it into AUDIT_SCHEMA text rows via ``audit_from_rows``.
-    Same drop-rows-never-runs semantics as ``split_on`` (reference:
-    src/P6/__main__.py:258-268).
 
     NULL-safe (round-11 ADVICE): a NULL predicate routes the row to the
     DEAD side — a naive ``filter(pred)/filter(~pred)`` pair drops

@@ -48,5 +48,7 @@ def parse_hpo_cell(col: Column) -> tuple[Column, Column]:
 
 def is_nad(col: Column) -> Column:
     """NAD placeholder filter (reference src/P6/mapper.py:330-334):
-    'no abnormality detected' rows are dropped with a warning."""
-    return F.upper(F.trim(col.cast("string"))) == "NAD"
+    'no abnormality detected' rows are dropped with a warning. NULL-safe:
+    a NULL cell is not NAD (false, never NULL), so it reaches the parse
+    audit instead of vanishing from both sides of ``filter(~nad)``."""
+    return F.upper(F.trim(col.cast("string"))).eqNullSafe("NAD")

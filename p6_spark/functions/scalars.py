@@ -10,19 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Vocabulary maps — reference src/P6/mapper.py:67-80 (token -> canonical term).
-ZYGOSITY_MAP = {
-    "het": "heterozygous",
-    "hom": "homozygous",
-    "comphet": "compound_heterozygosity",
-    "hemi": "hemizygous",
-    "mosaic": "mosaic",
-}
-INHERITANCE_MAP = {
-    "unknown": "unknown",
-    "inherited": "inherited",
-    "denovo": "de_novo_mutation",
-}
+# Vocabulary maps (token -> canonical term) live with the record schemas.
+from p6_spark.schemas import INHERITANCE_MAP, ZYGOSITY_MAP  # noqa: F401
+
 # GENO allelic-state CURIEs — reference src/P6/genotype.py:56-64.
 GENO_ALLELIC_STATE = {
     "heterozygous": "GENO:0000135",

@@ -67,6 +67,23 @@ def minhash_signatures(
     return toks.groupBy(id_col).agg(*aggs)
 
 
+def band_array(num_hashes: int = 8, band_size: int = 2) -> Column:
+    """Array of (band_idx, band_val) structs over the signature columns
+    h0..h{num_hashes-1}: band b is h{b*band_size}..h{b*band_size+band_size-1}
+    joined by '_'. Explode it to get one row per (doc, band)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_idx"),
+                F.concat_ws(
+                    "_", *[F.col(f"h{b * band_size + j}").cast("string") for j in range(band_size)]
+                ).alias("band_val"),
+            )
+            for b in range(num_hashes // band_size)
+        ]
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -87,18 +104,7 @@ def lsh_candidate_pairs(
     buckets go quadratic at sf1.0 — caught by the round-4 scaling
     sweep; real corpora are gentler but the cap is what makes the
     operator safe at ANY scale.)"""
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[F.col(f"h{b * band_size + j}").cast("string") for j in range(band_size)]
-                ).alias("band_val"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    bands = band_array(num_hashes, band_size)
     banded = sigs.select(F.col(id_col), F.explode(bands).alias("band")).select(
         F.col(id_col),
         F.col("band.band_idx").alias("band_idx"),
@@ -279,35 +285,25 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(tokens(text)), shingle), 1)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram-shingle Jaccard for every pair sharing >= 1 shingle.
-    |A ∩ B| from a self-join on distinct shingles; |A ∪ B| = |A|+|B|-∩.
-    At scale this runs AFTER LSH banding has cut the candidate set."""
-    sh = df.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), n))).alias("sh")
+def shingle_overlap(docs: DataFrame) -> DataFrame:
+    """(id_b, id_a, n_common, n_a, n_b) for every pair of ``docs(doc_id,
+    text)`` sharing >= 1 distinct 3-word shingle: |A ∩ B| from a
+    self-join on distinct shingles, |A| and |B| joined back — the inputs
+    of Jaccard and containment. At scale this runs AFTER LSH banding has
+    cut the candidate set."""
+    sh = docs.select(
+        "doc_id", F.explode(F.array_distinct(word_shingles(F.col("text"), 3))).alias("sh")
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .join(
+            sh.alias("b"),
+            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b")
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
-    )
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.operators.similarity import cosine
+from p6_spark.operators.similarity import rank_cosine
 from p6_spark.operators.text import md5_int
 
 
@@ -317,18 +317,6 @@ def ivf_topk(
         )
         .withColumn("cid", F.explode(F.transform(probes, lambda p: p["cid"])))
     )
-    scored = (
-        indexed.join(q, "cid")
-        .filter(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
+    return rank_cosine(
+        indexed.join(q, "cid").filter(F.col("match_id") != F.col("query_id")), k
     )

@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -46,20 +46,88 @@ def brute_force_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
     )
     c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec"))
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
+    return rank_cosine(c.crossJoin(q).filter(F.col("match_id") != F.col("query_id")), k)
+
+
+def rank_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k tail of every cosine search: score (query_id, match_id,
+    qvec, cvec) pairs by cosine rounded to 6 decimals, rank per query
+    with a match_id tiebreak, keep rnk <= k."""
+    scored = pairs.select(
+        "query_id",
+        "match_id",
+        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("match_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .orderBy("query_id", "rnk")
+    )
+
+
+def gram_products(emb: DataFrame) -> DataFrame:
+    """(i, j, p): every upper-triangle (j >= i, 1-based) product of the
+    x1e4-quantized long components of each vector — summed per (i, j)
+    they are the Gram matrix X^T X. Each row's products expand map-side
+    from (i, v_i, tail = qv[i..end]), so no self-join."""
+    qv = F.transform("embedding", lambda x: F.round(x.cast("double") * 10000, 0).cast("long"))
+    e = emb.select("vec_id", qv.alias("qv"))
+    rows = e.select(
+        "vec_id", F.posexplode("qv").alias("pos0", "vi"), F.col("qv")
+    ).select(
+        (F.col("pos0") + 1).alias("i"),
+        "vi",
+        F.expr("slice(qv, pos0 + 1, size(qv) - pos0)").alias("tail"),
+    )
+    return rows.select(
+        "i",
+        F.posexplode(F.expr("transform(tail, x -> x * vi)")).alias("dj", "p"),
+    ).select("i", (F.col("i") + F.col("dj")).alias("j"), "p")
+
+
+# Product quantization over a fixed sign-grid codebook: PQ_SUBSPACES
+# subvectors of PQ_DIMS dims, each coded by its PQ_DIMS sign bits.
+PQ_SUBSPACES = 8
+PQ_DIMS = 8  # dims per subspace
+
+
+def pq_code_array(v: Column) -> Column:
+    """Array of (sub, code) structs for the double vector ``v``: bit j of
+    subspace s's code is round(v[s * PQ_DIMS + j] * 1000) > 0."""
+    code_cols = []
+    for s in range(PQ_SUBSPACES):
+        bits = [
+            F.when(F.round(v[s * PQ_DIMS + j] * 1000, 0) > 0, F.lit(1 << j)).otherwise(0)
+            for j in range(PQ_DIMS)
+        ]
+        code = bits[0]
+        for b in bits[1:]:
+            code = code + b
+        code_cols.append(F.struct(F.lit(s).alias("sub"), code.alias("code")))
+    return F.array(*code_cols)
+
+
+def pq_adc_lut(spark: SparkSession, q: DataFrame) -> DataFrame:
+    """(qid, sub, code, adc): the asymmetric-distance lookup table of the
+    queries ``q(qid, qi)`` (x1000-quantized long vectors) against every
+    one of the 256 codes of every subspace."""
+    return q.crossJoin(
+        F.broadcast(
+            spark.range(PQ_SUBSPACES)
+            .select(F.col("id").cast("int").alias("sub"))
+            .crossJoin(spark.range(256).select(F.col("id").cast("int").alias("code")))
+        )
+    ).select(
+        "qid",
+        "sub",
+        "code",
+        F.expr(
+            f"aggregate(sequence(0, {PQ_DIMS - 1}), cast(0 as bigint),"
+            " (acc, j) -> acc + CASE WHEN ((code >> j) % 2) = 1"
+            f" THEN qi[sub * {PQ_DIMS} + j]"
+            f" ELSE -qi[sub * {PQ_DIMS} + j] END)"
+        ).alias("adc"),
     )
 
 
@@ -418,20 +486,10 @@ def lsh_ann_topk(
             F.posexplode(sigs).alias("tbl", "sig"),
         )
     )
-    scored = (
+    return rank_cosine(
         c.join(q, ["tbl", "sig"])
         .filter(F.col("match_id") != F.col("query_id"))
         .select("query_id", "match_id", "qvec", "cvec")
-        .dropDuplicates(["query_id", "match_id"])
-        .select(
-            "query_id",
-            "match_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
+        .dropDuplicates(["query_id", "match_id"]),
+        k,
     )

@@ -24,8 +24,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from p6_spark.operators import dedup as dd
+from p6_spark.operators.ranking import two_phase_rank
 from p6_spark.operators.text import (
     bpe_ish_token_count,
     fingerprint,
@@ -127,3 +129,95 @@ def prepare_corpus(
 
         write_partitioned(out, out_path, [partition_col])
     return out, CorpusStats(n_raw, n_quality, n_exact, n_near)
+
+
+# ---------------------------------------------------------------------------
+# Curation reports: shared by the raising plans and their dead-letter twins
+# ---------------------------------------------------------------------------
+
+PACK_BUDGET = 4096  # chars per packed training sequence (token proxy)
+
+
+def pack_sequences(docs: DataFrame) -> DataFrame:
+    """(seq_id, docs_in_seq, n_straddle) for greedy fixed-window packing of
+    ``docs(doc_id, n_chars)`` in doc_id order: a document belongs to the
+    PACK_BUDGET-char window its start offset falls in and straddles when
+    its last char lands in a later window. The running offset is the
+    distributed two-phase prefix sum, never an unpartitioned window."""
+    ranked = two_phase_rank(
+        docs, [F.asc("doc_id")], F.col("doc_id"), cum_cols=["n_chars"]
+    )
+    assigned = ranked.select(
+        F.expr(f"(cum_n_chars - n_chars) div {PACK_BUDGET}").alias("seq_id"),
+        F.when(
+            F.expr(
+                f"(cum_n_chars - n_chars) div {PACK_BUDGET}"
+                f" <> (cum_n_chars - 1) div {PACK_BUDGET}"
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("straddles"),
+    )
+    return assigned.groupBy("seq_id").agg(
+        F.count(F.lit(1)).alias("docs_in_seq"),
+        F.sum("straddles").alias("n_straddle"),
+    )
+
+
+def quality_budget_rank(scored: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(ranked, budget) for the greedy quality budget cut over
+    ``scored(doc_id, lang, n_tok, qscore_x1e6)``: the running token count
+    cum_n_tok down the (qscore desc, doc_id) ranking, and the 1-row
+    budget = 25% of the scored tokens."""
+    ranked = two_phase_rank(
+        scored,
+        [F.desc("qscore_x1e6"), F.asc("doc_id")],
+        F.col("qscore_x1e6"),
+        descending=True,
+        cum_cols=["n_tok"],
+    )
+    return ranked, scored.agg(F.expr("sum(n_tok) div 4").alias("budget"))
+
+
+def percentile_prune_report(scored: DataFrame) -> DataFrame:
+    """Per-language tie-atomic bottom-quartile prune over
+    ``scored(lang, n_tok, qs)``: the threshold is the largest score whose
+    cumulative ascending count still fits in floor(N/4), so a tie group
+    is dropped or kept whole. The cumulative walk runs on the aggregated
+    (lang, score) table. -1 threshold when nothing fits."""
+    per_s = scored.groupBy("lang", "qs").agg(
+        F.count(F.lit(1)).alias("cnt"), F.sum("n_tok").alias("tok")
+    )
+    wc = W.partitionBy("lang").orderBy("qs").rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    wl = W.partitionBy("lang")
+    cum = per_s.select(
+        "lang",
+        "qs",
+        F.sum("cnt").over(wc).alias("cum_cnt"),
+        F.sum("tok").over(wc).alias("cum_tok"),
+        F.sum("cnt").over(wl).alias("nd"),
+        F.sum("tok").over(wl).alias("tok_total"),
+    )
+    return cum.groupBy("lang").agg(
+        F.max("nd").cast("long").alias("n_docs"),
+        F.max("tok_total").cast("long").alias("tok_total"),
+        F.expr(
+            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4 THEN qs END),"
+            " -1) AS bigint)"
+        ).alias("threshold_x1e6"),
+        F.expr(
+            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
+            " THEN cum_cnt END), 0) AS bigint)"
+        ).alias("n_dropped"),
+        F.expr(
+            "cast(max(nd) - coalesce(max(CASE WHEN cum_cnt <= nd div 4"
+            " THEN cum_cnt END), 0) AS bigint)"
+        ).alias("n_kept"),
+        F.expr(
+            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
+            " THEN cum_tok END), 0) AS bigint)"
+        ).alias("tok_dropped"),
+    )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
 
@@ -213,14 +214,13 @@ def q_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_NOT_IN_SQL)
 
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 @register(
     "txt_tfidf",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
 ),
 tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
 dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),

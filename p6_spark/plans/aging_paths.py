@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import sql_lsh_pairs, sql_minhash_sig
 from p6_spark.sources.tables import load_table
 
 
@@ -181,21 +181,8 @@ _BF_HOPS = 3
 @register(
     "q_graph_cheapest_path",
     oracle=f"""
-WITH RECURSIVE {_sql_minhash_sig('doc_id < 500')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH RECURSIVE {sql_minhash_sig('doc_id < 500')},
+{sql_lsh_pairs(cap=None, select="a.doc_id AS u, b.doc_id AS v")},
 wpairs AS (
   SELECT p.u, p.v,
          1 + (CASE WHEN sa.h0 <> sb.h0 THEN 1 ELSE 0 END)

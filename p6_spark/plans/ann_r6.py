@@ -11,10 +11,10 @@ of floats is searched from the codes file alone.
 
 A genuine composition of two already-certified stages: the coarse
 model is bit-identical to sim_ivf_ann's fixed-point Lloyd build
-(plans/llm_ops._SQL_IVF_MODEL replays it), and the codes/LUT are
+(plans/twins.SQL_IVF_MODEL replays it), and the codes/LUT are
 bit-identical to sim_pq_search's sign-grid codebook
-(plans/market_ml._sql_pq_code) — so the composed oracle reuses both
-CTE chains verbatim and every emitted value stays an exact integer.
+(plans/twins.sql_pq_codes and sql_pq_lut) — so the composed oracle
+reuses both CTE chains verbatim and every emitted value stays an exact integer.
 
 Reference scope: the reference engine has no vector surface at all
 (it is a clinical pandas CLI); this family exists for the harness's
@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _SQL_IVF_MODEL
-from p6_spark.plans.market_ml import _PQ_DIMS, _PQ_SUBSPACES, _sql_pq_code
+from p6_spark.operators.similarity import pq_adc_lut, pq_code_array
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_IVF_MODEL, sql_pq_codes, sql_pq_lut, sql_ranker_legs
 from p6_spark.sources.tables import load_table
 
 _N_PROBE = 2
@@ -40,7 +40,7 @@ _TOP_K = 5
 @register(
     "sim_ivfpq_search",
     oracle=f"""
-WITH {_SQL_IVF_MODEL},
+WITH {SQL_IVF_MODEL},
 probes AS (
   SELECT query_id, cid FROM (
     SELECT vec_id AS query_id, cid,
@@ -54,26 +54,8 @@ cand AS (
   WHERE af.vec_id <> p.query_id
 ),
 ef AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
-codes AS (
-  SELECT vec_id, sub, code FROM ef,
-    LATERAL (SELECT unnest([{", ".join(str(s) for s in range(_PQ_SUBSPACES))}]) AS sub,
-                    unnest([{", ".join(_sql_pq_code(s) for s in range(_PQ_SUBSPACES))}]) AS code) c
-),
-q AS (
-  SELECT vec_id AS qid,
-         list_transform(v, x -> cast(round(x * 1000, 0) AS bigint)) AS qi
-  FROM ef WHERE vec_id < 3
-),
-lut AS (
-  SELECT qid, s.sub, cc.code,
-         list_sum(list_transform(generate_series(0, {_PQ_DIMS - 1}), j ->
-           CASE WHEN ((cc.code >> j) % 2) = 1
-                THEN qi[s.sub * {_PQ_DIMS} + j + 1]
-                ELSE -qi[s.sub * {_PQ_DIMS} + j + 1] END)) AS adc
-  FROM q,
-       (SELECT unnest([{", ".join(str(s) for s in range(_PQ_SUBSPACES))}]) AS sub) s,
-       (SELECT unnest(generate_series(0, 255)) AS code) cc
-),
+{sql_pq_codes("ef")},
+{sql_pq_lut("ef")},
 scored AS (
   SELECT c.query_id, c.match_id, cast(sum(l.adc) AS bigint) AS adc_x1000
   FROM cand c
@@ -133,19 +115,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = F.transform("embedding", lambda x: x.cast("double"))
     e = emb.select(F.col("vec_id").alias("match_id"), v.alias("v"))
-    code_cols = []
-    for s in range(_PQ_SUBSPACES):
-        bits = [
-            F.when(
-                F.round(F.col("v")[s * _PQ_DIMS + j] * 1000, 0) > 0, F.lit(1 << j)
-            ).otherwise(0)
-            for j in range(_PQ_DIMS)
-        ]
-        code = bits[0]
-        for b in bits[1:]:
-            code = code + b
-        code_cols.append(F.struct(F.lit(s).alias("sub"), code.alias("code")))
-    codes = e.select("match_id", F.explode(F.array(*code_cols)).alias("c")).select(
+    codes = e.select("match_id", F.explode(pq_code_array(F.col("v"))).alias("c")).select(
         "match_id", F.col("c.sub").alias("sub"), F.col("c.code").alias("code")
     )
 
@@ -170,27 +140,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qp = F.broadcast(
         q.select("qid", F.explode(F.transform(probes, lambda p: p["cid"])).alias("cid"))
     )
-    lut = F.broadcast(
-        q.crossJoin(
-            F.broadcast(
-                spark.range(_PQ_SUBSPACES)
-                .select(F.col("id").cast("int").alias("sub"))
-                .crossJoin(
-                    spark.range(256).select(F.col("id").cast("int").alias("code"))
-                )
-            )
-        ).select(
-            "qid",
-            "sub",
-            "code",
-            F.expr(
-                f"aggregate(sequence(0, {_PQ_DIMS - 1}), cast(0 as bigint),"
-                " (acc, j) -> acc + CASE WHEN ((code >> j) % 2) = 1"
-                f" THEN qi[sub * {_PQ_DIMS} + j]"
-                f" ELSE -qi[sub * {_PQ_DIMS} + j] END)"
-            ).alias("adc"),
-        )
-    )
+    lut = F.broadcast(pq_adc_lut(spark, q))
 
     cand = (
         assigned.join(qp, "cid")
@@ -221,85 +171,13 @@ _RRF_LIST_DEPTH = 20  # per-ranker candidate depth
 _RRF_TOP = 10
 
 
-@register(
-    "sim_hybrid_rrf",
-    oracle=f"""
-WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 3),
-dense AS (
-  SELECT qid, match_id, rnk FROM (
-    SELECT q.qid, e.vec_id AS match_id,
-           row_number() OVER (PARTITION BY q.qid ORDER BY
-             round(list_inner_product(qv, v)
-                   / (sqrt(list_inner_product(qv, qv))
-                      * sqrt(list_inner_product(v, v))), 6) DESC,
-             e.vec_id) AS rnk
-    FROM q, e WHERE e.vec_id <> q.qid
-  ) WHERE rnk <= {_RRF_LIST_DEPTH}
-),
-toks AS (
-  SELECT doc_id, unnest(list_distinct(list_filter(
-    string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS tok
-  FROM documents
-),
-tsz AS (SELECT doc_id, cast(count(*) AS bigint) AS n_tok FROM toks GROUP BY doc_id),
-qt AS (SELECT doc_id AS qid, tok FROM toks WHERE doc_id < 3),
-inter AS (
-  SELECT qt.qid, t.doc_id AS match_id, cast(count(*) AS bigint) AS n_common
-  FROM qt JOIN toks t ON t.tok = qt.tok AND t.doc_id <> qt.qid
-  GROUP BY 1, 2
-),
-lex AS (
-  SELECT qid, match_id, rnk FROM (
-    SELECT i.qid, i.match_id,
-           row_number() OVER (PARTITION BY i.qid ORDER BY
-             (i.n_common * 1000000)
-               // (sa.n_tok + sb.n_tok - i.n_common) DESC,
-             i.match_id) AS rnk
-    FROM inter i
-    JOIN tsz sa ON sa.doc_id = i.qid
-    JOIN tsz sb ON sb.doc_id = i.match_id
-  ) WHERE rnk <= {_RRF_LIST_DEPTH}
-),
-fused AS (
-  SELECT coalesce(d.qid, l.qid) AS query_id,
-         coalesce(d.match_id, l.match_id) AS match_id,
-         cast(coalesce(1000000 // ({_RRF_K} + d.rnk), 0)
-              + coalesce(1000000 // ({_RRF_K} + l.rnk), 0) AS bigint) AS rrf_x1e6,
-         cast(d.rnk AS bigint) AS dense_rnk,
-         cast(l.rnk AS bigint) AS lex_rnk
-  FROM dense d FULL JOIN lex l ON l.qid = d.qid AND l.match_id = d.match_id
-)
-SELECT query_id, rnk, match_id, rrf_x1e6, dense_rnk, lex_rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY rrf_x1e6 DESC, match_id) AS rnk
-  FROM fused
-) WHERE rnk <= {_RRF_TOP}
-ORDER BY query_id, rnk
-""",
-    doc="Hybrid retrieval via reciprocal-rank fusion (Cormack et al., "
-    "'Reciprocal Rank Fusion outperforms Condorcet'): each query doc "
-    "(vec_id < 3; the embeddings and documents tables are id-aligned) "
-    f"retrieves a dense top-{_RRF_LIST_DEPTH} (round-6 cosine, the "
-    "sim_cosine_topk baseline) and a lexical top-"
-    f"{_RRF_LIST_DEPTH} (exact x1e6 distinct-token Jaccard through a "
-    "posting equi-join — only docs sharing a term are ever scored, the "
-    "inverted-index shape), then fuses on rrf = sum over lists of "
-    f"1e6 div ({_RRF_K} + rank) — exact integers, so ties and ordering "
-    "replay in DuckDB. The full-outer union keeps single-list hits "
-    "with NULL rank on the missing leg (standard RRF over the union). "
-    "At scale each leg is the certified retrieval operator it reuses "
-    "(ANN for dense, postings for lexical); the fusion itself is "
-    "rank-only — list-depth-bounded rows per query, no score "
-    "calibration across heterogeneous rankers needed.",
-    tags=("similarity", "retrieval", "rag", "fixed-point"),
-)
-def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ranker_legs(emb: DataFrame, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two top-_RRF_LIST_DEPTH legs per query doc (vec_id/doc_id < 3;
+    the tables are id-aligned): dense (qid, match_id, drnk) by round-6
+    cosine, and lexical (qid, match_id, lrnk) by exact x1e6
+    distinct-token Jaccard over a posting equi-join."""
     from p6_spark.operators import dedup as dd
     from p6_spark.operators import similarity as sim
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents")
 
     dense = (
         sim.brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), k=_RRF_LIST_DEPTH)
@@ -339,6 +217,49 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lrnk") <= _RRF_LIST_DEPTH)
         .select("qid", "match_id", "lrnk")
     )
+    return dense, lex
+
+
+@register(
+    "sim_hybrid_rrf",
+    oracle=f"""
+WITH {sql_ranker_legs(_RRF_LIST_DEPTH)},
+fused AS (
+  SELECT coalesce(d.qid, l.qid) AS query_id,
+         coalesce(d.match_id, l.match_id) AS match_id,
+         cast(coalesce(1000000 // ({_RRF_K} + d.rnk), 0)
+              + coalesce(1000000 // ({_RRF_K} + l.rnk), 0) AS bigint) AS rrf_x1e6,
+         cast(d.rnk AS bigint) AS dense_rnk,
+         cast(l.rnk AS bigint) AS lex_rnk
+  FROM dense d FULL JOIN lex l ON l.qid = d.qid AND l.match_id = d.match_id
+)
+SELECT query_id, rnk, match_id, rrf_x1e6, dense_rnk, lex_rnk FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY rrf_x1e6 DESC, match_id) AS rnk
+  FROM fused
+) WHERE rnk <= {_RRF_TOP}
+ORDER BY query_id, rnk
+""",
+    doc="Hybrid retrieval via reciprocal-rank fusion (Cormack et al., "
+    "'Reciprocal Rank Fusion outperforms Condorcet'): each query doc "
+    "(vec_id < 3; the embeddings and documents tables are id-aligned) "
+    f"retrieves a dense top-{_RRF_LIST_DEPTH} (round-6 cosine, the "
+    "sim_cosine_topk baseline) and a lexical top-"
+    f"{_RRF_LIST_DEPTH} (exact x1e6 distinct-token Jaccard through a "
+    "posting equi-join — only docs sharing a term are ever scored, the "
+    "inverted-index shape), then fuses on rrf = sum over lists of "
+    f"1e6 div ({_RRF_K} + rank) — exact integers, so ties and ordering "
+    "replay in DuckDB. The full-outer union keeps single-list hits "
+    "with NULL rank on the missing leg (standard RRF over the union). "
+    "At scale each leg is the certified retrieval operator it reuses "
+    "(ANN for dense, postings for lexical); the fusion itself is "
+    "rank-only — list-depth-bounded rows per query, no score "
+    "calibration across heterogeneous rankers needed.",
+    tags=("similarity", "retrieval", "rag", "fixed-point"),
+)
+def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    dense, lex = _ranker_legs(emb, load_table(spark, sf_dir, "documents"))
 
     fused = (
         dense.join(lex, ["qid", "match_id"], "full")
@@ -374,43 +295,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ranker_agreement",
     oracle=f"""
-WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 3),
-dense AS (
-  SELECT qid, match_id, rnk FROM (
-    SELECT q.qid, e.vec_id AS match_id,
-           row_number() OVER (PARTITION BY q.qid ORDER BY
-             round(list_inner_product(qv, v)
-                   / (sqrt(list_inner_product(qv, qv))
-                      * sqrt(list_inner_product(v, v))), 6) DESC,
-             e.vec_id) AS rnk
-    FROM q, e WHERE e.vec_id <> q.qid
-  ) WHERE rnk <= {_RRF_LIST_DEPTH}
-),
-toks AS (
-  SELECT doc_id, unnest(list_distinct(list_filter(
-    string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS tok
-  FROM documents
-),
-tsz AS (SELECT doc_id, cast(count(*) AS bigint) AS n_tok FROM toks GROUP BY doc_id),
-qt AS (SELECT doc_id AS qid, tok FROM toks WHERE doc_id < 3),
-inter AS (
-  SELECT qt.qid, t.doc_id AS match_id, cast(count(*) AS bigint) AS n_common
-  FROM qt JOIN toks t ON t.tok = qt.tok AND t.doc_id <> qt.qid
-  GROUP BY 1, 2
-),
-lex AS (
-  SELECT qid, match_id, rnk FROM (
-    SELECT i.qid, i.match_id,
-           row_number() OVER (PARTITION BY i.qid ORDER BY
-             (i.n_common * 1000000)
-               // (sa.n_tok + sb.n_tok - i.n_common) DESC,
-             i.match_id) AS rnk
-    FROM inter i
-    JOIN tsz sa ON sa.doc_id = i.qid
-    JOIN tsz sb ON sb.doc_id = i.match_id
-  ) WHERE rnk <= {_RRF_LIST_DEPTH}
-),
+WITH {sql_ranker_legs(_RRF_LIST_DEPTH)},
 shared AS (
   SELECT d.qid, d.match_id, d.rnk AS drnk, l.rnk AS lrnk
   FROM dense d JOIN lex l ON l.qid = d.qid AND l.match_id = d.match_id
@@ -458,46 +343,8 @@ ORDER BY query_id
     tags=("similarity", "evaluation", "retrieval", "fixed-point"),
 )
 def sim_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from p6_spark.operators import dedup as dd
-    from p6_spark.operators import similarity as sim
-
     emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents")
-
-    dense = (
-        sim.brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), k=_RRF_LIST_DEPTH)
-        .select(F.col("query_id").alias("qid"), "match_id", F.col("rnk").alias("drnk"))
-    )
-
-    toks = materialize(dd.distinct_tokens(docs, "doc_id", "text"))
-    tsz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    qt = toks.filter(F.col("doc_id") < 3).select(F.col("doc_id").alias("qid"), "tok")
-    inter = (
-        F.broadcast(qt)
-        .join(toks.select(F.col("doc_id").alias("match_id"), "tok"), "tok")
-        .filter(F.col("match_id") != F.col("qid"))
-        .groupBy("qid", "match_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    wl = W.partitionBy("qid").orderBy(
-        F.desc(
-            F.expr("(n_common * cast(1000000 as bigint)) div (n_q + n_m - n_common)")
-        ),
-        F.asc("match_id"),
-    )
-    lex = (
-        inter.join(
-            tsz.select(F.col("doc_id").alias("qid"), F.col("n_tok").alias("n_q")),
-            "qid",
-        )
-        .join(
-            tsz.select(F.col("doc_id").alias("match_id"), F.col("n_tok").alias("n_m")),
-            "match_id",
-        )
-        .withColumn("lrnk", F.row_number().over(wl))
-        .filter(F.col("lrnk") <= _RRF_LIST_DEPTH)
-        .select("qid", "match_id", "lrnk")
-    )
+    dense, lex = _ranker_legs(emb, load_table(spark, sf_dir, "documents"))
 
     shared = materialize(dense.join(lex, ["qid", "match_id"]))
     a, b = shared.alias("a"), shared.alias("b")
@@ -546,7 +393,7 @@ def sim_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental IVF index maintenance: assign a new batch, report drift
 # ---------------------------------------------------------------------------
 
-_SQL_IVF_CORPUS = _SQL_IVF_MODEL.replace(
+_SQL_IVF_CORPUS = SQL_IVF_MODEL.replace(
     "FROM embeddings\n)", "FROM embeddings WHERE vec_id % 4 <> 0\n)"
 )
 

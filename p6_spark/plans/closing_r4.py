@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -26,7 +26,7 @@ _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')
     "txt_bigram_lm",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 bg AS (
   SELECT doc_id, t[i] AS w1, t[i + 1] AS w2

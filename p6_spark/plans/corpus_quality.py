@@ -12,6 +12,7 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.operators.text import bpe_ish_tokens
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
 _SQL_BPE_TOKENS = (
@@ -224,16 +225,12 @@ def pipe_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-source boilerplate / template-shingle report
 # ---------------------------------------------------------------------------
 
-_SQL_WS_TOKENS = (
-    "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-)
-
 
 @register(
     "txt_boilerplate_shingles",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, source, {_SQL_WS_TOKENS} AS t FROM documents
+  SELECT doc_id, source, {SQL_TOKENS} AS t FROM documents
 ),
 sh AS (
   SELECT DISTINCT doc_id, source,

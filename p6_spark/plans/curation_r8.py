@@ -33,12 +33,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _sql_adaptive_cand
+from p6_spark.pipelines.llm_corpus import PACK_BUDGET
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import (
+    SQL_MD5INT,
+    SQL_TOKENS,
+    sql_adaptive_cand,
+    sql_lsh_pairs,
+    sql_minhash_cols,
+)
 from p6_spark.sources.tables import load_table
 
 _N_SHARDS = 16
-_PACK_BUDGET = 4096  # chars per packed sequence (matches packing_r7)
 _WORLD = 8  # data-parallel workers
 _MICRO = 4  # sequences per worker per step
 _KNN_K = 5
@@ -46,8 +52,6 @@ _THRESHOLDS = (10_000, 50_000, 100_000, 250_000, 500_000)  # jaccard x1e6
 _DUP_CUT = 250_000  # confirmed-dup threshold for the shard audit
 
 # DuckDB twins of the shared fragments (same spellings as llm_ops)
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 def _sql_serpentine_shard() -> str:
@@ -71,41 +75,15 @@ def _sql_capped_minhash_pairs(num_hashes: int = 8, max_bucket: int = 20) -> str:
     """CTEs ending in ``cand`` (id_a < id_b, distinct): banded MinHash
     candidates over the FULL documents table with the max_bucket cap —
     the same construction certified in dd_cc_clusters/dd_cluster_best."""
-    parts = []
-    for i in range(num_hashes):
-        seeded = "'" + str(i) + "_' || tok"
-        parts.append(f"min({_SQL_MD5INT.format(x=seeded)}) AS h{i}")
-    hashes = ",\n         ".join(parts)
     return f"""toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok FROM documents
+  SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS tok FROM documents
 ),
 sig AS (
   SELECT doc_id,
-         {hashes}
+         {sql_minhash_cols(num_hashes)}
   FROM toks GROUP BY doc_id
 ),
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= {max_bucket}
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-)"""
+{sql_lsh_pairs(cap=max_bucket, name="cand")}"""
 
 
 def _sql_jaccard_scored() -> str:
@@ -121,7 +99,7 @@ shl AS MATERIALIZED (
                 THEN list_transform(generate_series(1, len(t) - 2),
                                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
                 ELSE [array_to_string(t, ' ')] END) AS sl
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, {SQL_TOKENS} AS t FROM documents)
 ),
 scored AS (
   SELECT id_a, id_b,
@@ -256,7 +234,7 @@ e AS (
 ),
 k AS (
   SELECT doc_id, tier, epoch,
-         {_SQL_MD5INT.format(x="'e' || epoch || ':' || doc_id")} AS h
+         {SQL_MD5INT.format(x="'e' || epoch || ':' || doc_id")} AS h
   FROM e
 ),
 o AS (
@@ -352,19 +330,19 @@ def pipe_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (SELECT cast(sum(n_chars) AS bigint) AS total_chars FROM documents),
 s AS (
   SELECT total_chars,
-         (total_chars + {_PACK_BUDGET - 1}) // {_PACK_BUDGET} AS n_seqs
+         (total_chars + {PACK_BUDGET - 1}) // {PACK_BUDGET} AS n_seqs
   FROM t
 )
 SELECT n_seqs,
        cast(n_seqs // {_WORLD * _MICRO} AS bigint) AS steps_per_epoch,
        cast(n_seqs % {_WORLD * _MICRO} AS bigint) AS seqs_dropped,
        cast({_WORLD * _MICRO} AS bigint) AS global_batch_seqs,
-       cast((total_chars::HUGEINT * 1000000) // (n_seqs * {_PACK_BUDGET})
+       cast((total_chars::HUGEINT * 1000000) // (n_seqs * {PACK_BUDGET})
             AS bigint) AS utilization_x1e6
 FROM s
 """,
     doc="Dataloader accounting for a fixed-shape run: packed-sequence "
-    f"count at the {_PACK_BUDGET}-char budget (ceil(total/budget) — the "
+    f"count at the {PACK_BUDGET}-char budget (ceil(total/budget) — the "
     "window count pipe_sequence_packing's histogram decomposes), steps "
     f"per epoch for {_WORLD} data-parallel workers x {_MICRO} sequences "
     "each with drop_last semantics, sequences dropped by the remainder "
@@ -383,7 +361,7 @@ def pipe_dataloader_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "total_chars",
             F.expr(
-                f"(total_chars + {_PACK_BUDGET - 1}) div {_PACK_BUDGET}"
+                f"(total_chars + {PACK_BUDGET - 1}) div {PACK_BUDGET}"
             ).alias("n_seqs"),
         )
         .select(
@@ -393,7 +371,7 @@ def pipe_dataloader_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(g).cast("long").alias("global_batch_seqs"),
             F.expr(
                 "(cast(total_chars as decimal(38,0)) * 1000000) "
-                f"div (n_seqs * {_PACK_BUDGET})"
+                f"div (n_seqs * {PACK_BUDGET})"
             ).alias("utilization_x1e6"),
         )
     )
@@ -402,7 +380,7 @@ def pipe_dataloader_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_knn_graph",
     oracle=f"""
-WITH {_sql_adaptive_cand(materialized=True)},
+WITH {sql_adaptive_cand(materialized=True)},
 sym AS MATERIALIZED (
   SELECT id_a AS src, id_b AS dst FROM cand
   UNION ALL

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import sql_adaptive_cand
 from p6_spark.sources.tables import load_table
 
 
@@ -25,10 +26,8 @@ _DB_MINPTS = 3
 
 
 def _sql_dbscan_oracle() -> str:
-    from p6_spark.plans.llm_ops import _sql_adaptive_cand
-
     return f"""
-WITH {_sql_adaptive_cand()},
+WITH {sql_adaptive_cand()},
 q AS (
   SELECT vec_id, label,
          list_transform(embedding::double[],
@@ -288,10 +287,8 @@ def q_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dbscan_clusters_oracle() -> str:
-    from p6_spark.plans.llm_ops import _sql_adaptive_cand
-
     return f"""
-WITH RECURSIVE {_sql_adaptive_cand()},
+WITH RECURSIVE {sql_adaptive_cand()},
 q AS (
   SELECT vec_id,
          list_transform(embedding::double[],

@@ -14,11 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS, sql_lsh_pairs, sql_minhash_sig
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -244,18 +243,8 @@ def q_missing_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dd_minhash_calibration",
     oracle=f"""
-WITH {_sql_minhash_sig("doc_id < 1000").lstrip().lstrip(chr(10))},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_minhash_sig("doc_id < 1000").lstrip().lstrip(chr(10))},
+{sql_lsh_pairs(cap=None, compact=True)},
 est AS (
   SELECT p.id_a, p.id_b,
          ((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END) + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
@@ -265,7 +254,7 @@ est AS (
          ) * 125000 AS est_x1e6
   FROM pairs p JOIN sig sa ON p.id_a = sa.doc_id JOIN sig sb ON p.id_b = sb.doc_id
 ),
-dtoks AS (SELECT doc_id, list_sort(list_distinct({_SQL_TOKENS})) AS toks
+dtoks AS (SELECT doc_id, list_sort(list_distinct({SQL_TOKENS})) AS toks
           FROM documents WHERE doc_id < 1000),
 exact AS (
   SELECT e.id_a, e.id_b, e.est_x1e6,

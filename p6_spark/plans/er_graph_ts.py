@@ -12,8 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_SHINGLE_OVERLAP, sql_lsh_pairs, sql_minhash_sig
 from p6_spark.sources.tables import load_table
 
 
@@ -21,29 +21,8 @@ from p6_spark.sources.tables import load_table
 # Bounded BFS over the LSH candidate graph
 # ---------------------------------------------------------------------------
 
-_SQL_LSH_EDGES = f"""{_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+_SQL_LSH_EDGES = f"""{sql_minhash_sig('TRUE')},
+{sql_lsh_pairs()},
 edges AS (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
@@ -164,26 +143,12 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd_containment",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS t
   FROM documents WHERE doc_id < 150
 ),
-shingled AS (
-  SELECT doc_id,
-         unnest(list_distinct(
-           CASE WHEN len(t) >= 3
-                THEN list_transform(generate_series(1, len(t) - 2),
-                                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                ELSE [array_to_string(t, ' ')] END)) AS sh
-  FROM base
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingled GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingled a JOIN shingled b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+{SQL_SHINGLE_OVERLAP}
 SELECT id_a, id_b, n_common,
        (n_common * 1000000) // least(sa.n_sh, sb.n_sh) AS containment_x1e6,
        (n_common * 1000000) // (sa.n_sh + sb.n_sh - n_common) AS jaccard_x1e6
@@ -205,25 +170,8 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    sh = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(dd.word_shingles(F.col("text"), 3))).alias("sh"),
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        dd.shingle_overlap(docs)
         .withColumn(
             "containment_x1e6",
             F.expr("(n_common * 1000000) div least(n_a, n_b)"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MATCH_CTES, sql_cal_binned
 from p6_spark.sources.tables import load_table
 
 _PASS_KS = (1, 2, 5)
@@ -140,38 +141,8 @@ def ml_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# CTE chain ordered -> matches -> pair_counts(t_a, t_b, n_games, a_wins):
-# the pairwise-preference match stream (consecutive same-user events form
-# a match between their event types; higher value wins, ties break to the
-# lexicographically smaller type). Shared by ml_bt_strength and the
-# round-9 ml_winrate_wilson so the two preference reports cannot drift.
-_SQL_MATCH_CTES = """ordered AS (
-  SELECT user_id, event_id, event_type, value,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_type,
-         lag(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value
-  FROM events
-),
-matches AS (
-  SELECT CASE WHEN value > prev_value
-                OR (value = prev_value AND event_type < prev_type)
-              THEN event_type ELSE prev_type END AS winner,
-         CASE WHEN value > prev_value
-                OR (value = prev_value AND event_type < prev_type)
-              THEN prev_type ELSE event_type END AS loser
-  FROM ordered
-  WHERE prev_type IS NOT NULL AND prev_type <> event_type
-),
-pair_counts AS (
-  SELECT CASE WHEN winner < loser THEN winner ELSE loser END AS t_a,
-         CASE WHEN winner < loser THEN loser ELSE winner END AS t_b,
-         count(*) AS n_games,
-         cast(sum(CASE WHEN winner < loser THEN 1 ELSE 0 END) AS bigint) AS a_wins
-  FROM matches GROUP BY 1, 2
-)"""
-
-
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(t_a, t_b, n_games, a_wins): the Spark twin of _SQL_MATCH_CTES."""
+    """(t_a, t_b, n_games, a_wins): the Spark twin of SQL_MATCH_CTES."""
     from pyspark.sql.window import Window as W
 
     ev = load_table(spark, sf_dir, "events")
@@ -215,7 +186,7 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_bt_strength",
     oracle=f"""
-WITH {_SQL_MATCH_CTES},
+WITH {SQL_MATCH_CTES},
 sided AS (
   SELECT t_a AS t, t_b AS opp, n_games, a_wins AS wins FROM pair_counts
   UNION ALL
@@ -379,17 +350,7 @@ def _cal_binned(df: DataFrame) -> DataFrame:
 @register(
     "ml_calibration_bins",
     oracle=f"""
-WITH scored AS (
-  SELECT least(1000000, greatest(0, cast(l_quantity AS bigint) * 20000))
-           AS conf_x1e6,
-         CASE WHEN l_extendedprice >= 30000 THEN 1 ELSE 0 END AS y
-  FROM lineitem
-),
-binned AS (
-  SELECT least({_CAL_BINS - 1}, conf_x1e6 // {1_000_000 // _CAL_BINS}) AS bin,
-         conf_x1e6, y
-  FROM scored
-),
+WITH {sql_cal_binned(_CAL_BINS)},
 per_bin AS (
   SELECT bin, count(*) AS n,
          cast(sum(conf_x1e6) AS bigint) AS sum_conf,
@@ -469,17 +430,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_brier_decomposition",
     oracle=f"""
-WITH scored AS (
-  SELECT least(1000000, greatest(0, cast(l_quantity AS bigint) * 20000))
-           AS conf_x1e6,
-         CASE WHEN l_extendedprice >= 30000 THEN 1 ELSE 0 END AS y
-  FROM lineitem
-),
-binned AS (
-  SELECT least({_CAL_BINS - 1}, conf_x1e6 // {1_000_000 // _CAL_BINS}) AS bin,
-         conf_x1e6, y
-  FROM scored
-),
+WITH {sql_cal_binned(_CAL_BINS)},
 direct AS (
   SELECT count(*) AS n_total,
          cast(sum(y) AS bigint) AS n_pos,

@@ -18,9 +18,9 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.operators.text import lang_id, md5_int
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_LANGID_PRED, SQL_MD5INT
 from p6_spark.sources.tables import load_table
 
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -38,8 +38,8 @@ _HLL_ALPHA_X1E6 = 718273
 WITH keys AS (SELECT DISTINCT o_custkey AS key FROM orders),
 hashed AS (
   SELECT key,
-         {_SQL_MD5INT.format(x="'hll_' || key")} // 16777216 AS bucket,
-         {_SQL_MD5INT.format(x="'hll_' || key")} % 16777216 AS w
+         {SQL_MD5INT.format(x="'hll_' || key")} // 16777216 AS bucket,
+         {SQL_MD5INT.format(x="'hll_' || key")} % 16777216 AS w
   FROM keys
 ),
 regs AS (
@@ -378,42 +378,11 @@ def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-class precision / recall / F1
 # ---------------------------------------------------------------------------
 
-_SQL_LANGID_PRED = """
-scored AS (
-  SELECT doc_id, lang AS actual_lang,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['the','a','value','table','row'])) AS s_en,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['der','die','das','und'])) AS s_de,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['le','la','et','les'])) AS s_fr,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['el','la','los','que'])) AS s_es,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['de','shi','bu'])) AS s_zh
-  FROM documents
-),
-pred AS (
-  SELECT doc_id, actual_lang,
-         CASE WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-              WHEN s_de > 0 AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
-              WHEN s_fr > 0 AND s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-              WHEN s_es > 0 AND s_es >= s_zh THEN 'es'
-              WHEN s_zh > 0 THEN 'zh'
-              ELSE 'unknown' END AS predicted_lang
-  FROM scored
-)"""
-
 
 @register(
     "ml_prf_metrics",
     oracle=f"""
-WITH {_SQL_LANGID_PRED.lstrip()},
+WITH {SQL_LANGID_PRED.lstrip()},
 classes AS (
   SELECT actual_lang AS cls FROM pred
   UNION

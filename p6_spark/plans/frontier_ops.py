@@ -13,10 +13,14 @@ from pyspark.sql.window import Window as W
 from p6_spark.materialize import materialize
 from p6_spark.operators.text import md5_int
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import (
+    SQL_MD5INT,
+    SQL_SIMHASH62_BITS,
+    SQL_SIMHASH62_VOTES,
+    SQL_TOKENS,
+)
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -95,36 +99,14 @@ def q_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_simhash_all() -> str:
     """DuckDB twin of operators/dedup.simhash62 over the WHOLE corpus
-    (no id panel) — bits 0..30 from md5_int(tok), 31..61 from
-    md5_int('s1_' || tok). See simhash62's round-7 versionchanged note."""
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN (h0 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(31)
-    ) + ",\n         " + ",\n         ".join(
-        f"sum(CASE WHEN (h1 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS w{b}"
-        for b in range(31)
-    )
-    bits = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(31)
-    ) + " + " + " + ".join(
-        f"(CASE WHEN w{b} > 0 THEN {1 << (31 + b)} ELSE 0 END)" for b in range(31)
-    )
+    (no id panel): CTEs toks -> hashed -> votes -> sig(doc_id, s)."""
     return f"""
 toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok FROM documents
+  SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS tok FROM documents
 ),
-hashed AS (
-  SELECT doc_id, {_SQL_MD5INT.format(x='tok')} AS h0,
-         {_SQL_MD5INT.format(x="('s1_' || tok)")} AS h1
-  FROM toks
-),
-votes AS (
-  SELECT doc_id,
-         {votes}
-  FROM hashed GROUP BY doc_id
-),
+{SQL_SIMHASH62_VOTES},
 sig AS (
-  SELECT doc_id, cast({bits} AS bigint) AS s FROM votes
+  SELECT doc_id, cast({SQL_SIMHASH62_BITS} AS bigint) AS s FROM votes
 )"""
 
 
@@ -254,7 +236,7 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH keyed AS (
   SELECT source, doc_id,
-         {_SQL_MD5INT.format(x="'rsv_' || doc_id")} AS rk
+         {SQL_MD5INT.format(x="'rsv_' || doc_id")} AS rk
   FROM documents
 ),
 ranked AS (

@@ -10,11 +10,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS, sql_lsh_pairs, sql_minhash_sig
 from p6_spark.sources.tables import load_table
 
-_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -25,21 +24,8 @@ _TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 @register(
     "q_graph_modularity",
     oracle=f"""
-WITH RECURSIVE {_sql_minhash_sig('doc_id < 1000')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH RECURSIVE {sql_minhash_sig('doc_id < 1000')},
+{sql_lsh_pairs(cap=None, select="a.doc_id AS u, b.doc_id AS v", materialized=True)},
 edges AS MATERIALIZED (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
 reach AS (
   SELECT u AS node, u AS label FROM edges
@@ -235,7 +221,7 @@ def ml_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "txt_keywords",
     oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKENS}) AS t FROM documents),
+WITH tok AS (SELECT doc_id, unnest({SQL_TOKENS}) AS t FROM documents),
 tf AS (SELECT doc_id, t, cast(count(*) AS bigint) AS tf FROM tok GROUP BY 1, 2),
 n AS (SELECT cast(count(DISTINCT doc_id) AS bigint) AS n_docs FROM tok),
 df AS (SELECT t, cast(count(*) AS bigint) AS df FROM tf GROUP BY t),

@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_PURCHASE_TOUCHES, SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
-_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -25,7 +25,7 @@ _TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
     "txt_novelty_curve",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 shingled AS (
   SELECT doc_id,
@@ -224,15 +224,8 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_attribution_compare",
-    oracle="""
-WITH purchases AS (
-  SELECT user_id, ts AS p_ts, event_id AS p_id
-  FROM events WHERE event_type = 'purchase'
-),
-touches AS (
-  SELECT user_id, ts AS t_ts, event_id AS t_id, event_type AS channel
-  FROM events WHERE event_type IN ('view', 'click', 'signup')
-),
+    oracle=f"""
+WITH {SQL_PURCHASE_TOUCHES},
 joined AS (
   SELECT p.p_id, t.channel,
          row_number() OVER (PARTITION BY p.p_id
@@ -330,7 +323,7 @@ def q_attribution_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "txt_burstiness",
     oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKENS}) AS t FROM documents),
+WITH tok AS (SELECT doc_id, unnest({SQL_TOKENS}) AS t FROM documents),
 per AS (SELECT t, doc_id, cast(count(*) AS bigint) AS x FROM tok GROUP BY 1, 2),
 n AS (SELECT cast(count(DISTINCT doc_id) AS bigint) AS n_docs FROM tok),
 agg AS (

@@ -22,8 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _SQL_TOKENS, _sql_bounded_cc, _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import (
+    sql_bounded_cc,
+    sql_lsh_pairs,
+    sql_lsh_probe_index,
+    sql_minhash_sig,
+)
 from p6_spark.sources.tables import load_table
 
 _CAP = 20
@@ -33,23 +38,8 @@ _TAU_X1E6 = 500000  # exact-Jaccard confirm threshold (0.5)
 @register(
     "dd_incremental_neardup",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, doc_id % 4 = 0 AS is_batch, band_idx, band_val
-  FROM (
-    SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-    UNION ALL
-    SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-    UNION ALL
-    SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-    UNION ALL
-    SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-  )
-),
-corpus_small AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands WHERE NOT is_batch
-  GROUP BY band_idx, band_val HAVING count(*) <= {_CAP}
-),
+WITH {sql_minhash_sig('TRUE')},
+{sql_lsh_probe_index('doc_id % 4 = 0', _CAP)},
 cand AS MATERIALIZED (
   SELECT DISTINCT b.doc_id AS b_id, c.doc_id AS c_id
   FROM bands b
@@ -111,19 +101,7 @@ def dd_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch = F.col("doc_id") % 4 == 0
     sigs = dd.minhash_signatures(docs)
 
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    F.col(f"h{2 * b}").cast("string"),
-                    F.col(f"h{2 * b + 1}").cast("string"),
-                ).alias("band_val"),
-            )
-            for b in range(4)
-        ]
-    )
+    bands = dd.band_array()
     banded = sigs.select(
         "doc_id", is_batch.alias("is_batch"), F.explode(bands).alias("band")
     ).select("doc_id", "is_batch", "band.band_idx", "band.band_val")
@@ -220,35 +198,14 @@ _SPLIT_SQL = (
 @register(
     "dd_split_leakage",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_minhash_sig('TRUE')},
+{sql_lsh_pairs()},
 edges AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
   SELECT id_b, id_a FROM pairs
 ),
-{_sql_bounded_cc()},
+{sql_bounded_cc()},
 ms AS (
   SELECT node AS doc_id, component,
          {_SPLIT_SQL.format(k='node')} AS split,
@@ -335,7 +292,7 @@ def dd_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipe_incremental_ingest",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
+WITH {sql_minhash_sig('TRUE')},
 base AS (
   SELECT doc_id, md5(text) AS content_md5,
          length(text) AS n_chars_m,
@@ -357,22 +314,7 @@ s2 AS MATERIALIZED (
   SELECT doc_id FROM keep_min
   WHERE content_md5 NOT IN (SELECT content_md5 FROM cmd5)
 ),
-bands AS (
-  SELECT doc_id, doc_id % 4 = 0 AS is_batch, band_idx, band_val
-  FROM (
-    SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-    UNION ALL
-    SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-    UNION ALL
-    SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-    UNION ALL
-    SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-  )
-),
-corpus_small AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands WHERE NOT is_batch
-  GROUP BY band_idx, band_val HAVING count(*) <= {_CAP}
-),
+{sql_lsh_probe_index('doc_id % 4 = 0', _CAP)},
 cand AS MATERIALIZED (
   SELECT DISTINCT b.doc_id AS b_id, c.doc_id AS c_id
   FROM (SELECT bb.* FROM bands bb JOIN s2 ON s2.doc_id = bb.doc_id) b
@@ -439,19 +381,7 @@ def pipe_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = materialize(keep_min.join(cmd5, "content_md5", "left_anti").select("doc_id"))
 
     sigs = dd.minhash_signatures(docs)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    F.col(f"h{2 * b}").cast("string"),
-                    F.col(f"h{2 * b + 1}").cast("string"),
-                ).alias("band_val"),
-            )
-            for b in range(4)
-        ]
-    )
+    bands = dd.band_array()
     banded = materialize(
         sigs.select(
             "doc_id", is_batch.alias("is_batch"), F.explode(bands).alias("band")

@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_TOKENS, sql_lsh_pairs, sql_minhash_cols
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -122,7 +122,7 @@ _RECALL_TAU_X1E6 = 400000  # token-Jaccard ground-truth threshold (0.4)
     "dd_lsh_recall",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok
+  SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS tok
   FROM documents WHERE doc_id < {_RECALL_SUBSET}
 ),
 sizes AS (SELECT doc_id, count(*) AS n_tok FROM toks GROUP BY doc_id),
@@ -138,20 +138,10 @@ truth AS (
 ),
 sig AS (
   SELECT doc_id,
-         {", ".join(f"min(('0x' || substr(md5('{i}_' || tok), 1, 8))::bigint) AS h{i}" for i in range(8))}
+         {sql_minhash_cols(sep=", ")}
   FROM toks GROUP BY doc_id
 ),
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+{sql_lsh_pairs(cap=None, name="cand", compact=True)},
 hits AS (SELECT t.id_a, t.id_b FROM truth t JOIN cand c ON t.id_a = c.id_a AND t.id_b = c.id_b)
 SELECT (SELECT count(*) FROM truth) AS n_truth,
        (SELECT count(*) FROM cand) AS n_candidates,

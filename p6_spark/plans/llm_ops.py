@@ -19,33 +19,27 @@ from p6_spark.operators import dedup as dd
 from p6_spark.operators import similarity as sim
 from p6_spark.operators.text import STOPWORDS, fingerprint, lang_id, tokens
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import (
+    SQL_IVF_MODEL,
+    SQL_LANGID_CASE,
+    SQL_LANGID_PRED,
+    SQL_MD5INT,
+    SQL_MIXTURE_WEIGHTS,
+    SQL_SIMHASH62_BITS,
+    SQL_SHINGLE_OVERLAP,
+    SQL_SIMHASH62_VOTES,
+    SQL_TOKENS,
+    sql_adaptive_cand,
+    sql_bounded_cc,
+    sql_corpus_funnel,
+    sql_cosine_rerank,
+    sql_langid_scores,
+    sql_lsh_bands,
+    sql_lsh_pairs,
+    sql_lsh_sig,
+    sql_minhash_sig,
+)
 from p6_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# shared DuckDB SQL fragments
-# ---------------------------------------------------------------------------
-
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
-
-
-def _sql_minhash_sig(where: str, num_hashes: int = 8) -> str:
-    parts = []
-    for i in range(num_hashes):
-        seeded = "'" + str(i) + "_' || tok"
-        parts.append(f"min({_SQL_MD5INT.format(x=seeded)}) AS h{i}")
-    hashes = ",\n         ".join(parts)
-    return f"""
-toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok
-  FROM documents WHERE {where}
-),
-sig AS (
-  SELECT doc_id,
-         {hashes}
-  FROM toks GROUP BY doc_id
-)"""
-
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -75,16 +69,8 @@ def dd_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dd_minhash_lsh_pairs",
     oracle=f"""
-WITH {_sql_minhash_sig('doc_id < 150')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-)
+WITH {sql_minhash_sig('doc_id < 150')},
+{sql_lsh_bands()}
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
@@ -103,38 +89,14 @@ def dd_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_simhash() -> str:
-    """DuckDB twin of operators/dedup.simhash62: bits 0..30 vote on
-    md5_int(tok), bits 31..61 on md5_int('s1_' || tok) — see the
-    simhash62 versionchanged note (round 7: widened from 16 bits, whose
-    512 total pigeonhole buckets were a recall cliff past ~10k docs)."""
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN (h0 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(31)
-    ) + ",\n         " + ",\n         ".join(
-        f"sum(CASE WHEN (h1 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS w{b}"
-        for b in range(31)
-    )
-    bits = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(31)
-    ) + " + " + " + ".join(
-        f"(CASE WHEN w{b} > 0 THEN {1 << (31 + b)} ELSE 0 END)" for b in range(31)
-    )
+    """DuckDB twin of operators/dedup.simhash62 over the doc_id < 200 panel."""
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok
+  SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS tok
   FROM documents WHERE doc_id < 200
 ),
-hashed AS (
-  SELECT doc_id, {_SQL_MD5INT.format(x='tok')} AS h0,
-         {_SQL_MD5INT.format(x="('s1_' || tok)")} AS h1
-  FROM toks
-),
-votes AS (
-  SELECT doc_id,
-         {votes}
-  FROM hashed GROUP BY doc_id
-)
-SELECT doc_id, cast({bits} AS bigint) AS simhash
+{SQL_SIMHASH62_VOTES}
+SELECT doc_id, cast({SQL_SIMHASH62_BITS} AS bigint) AS simhash
 FROM votes ORDER BY doc_id
 """
 
@@ -158,23 +120,9 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_ngram_jaccard",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents WHERE doc_id < 120
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents WHERE doc_id < 120
 ),
-shingled AS (
-  SELECT doc_id,
-         unnest(list_distinct(
-           CASE WHEN len(t) >= 3
-                THEN list_transform(generate_series(1, len(t) - 2),
-                                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                ELSE [array_to_string(t, ' ')] END)) AS sh
-  FROM base
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingled GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingled a JOIN shingled b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+{SQL_SHINGLE_OVERLAP}
 SELECT id_a, id_b, n_common,
        (n_common * 1000000) // (sa.n_sh + sb.n_sh - n_common) AS jaccard_x1e6
 FROM inter JOIN sizes sa ON sa.doc_id = id_a
@@ -189,24 +137,8 @@ ORDER BY id_a, id_b
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(dd.word_shingles(F.col("text"), 3))).alias("sh")
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        dd.shingle_overlap(docs)
         .withColumn(
             "jaccard_x1e6",
             F.expr("(n_common * 1000000) div (n_a + n_b - n_common)"),
@@ -226,7 +158,7 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_quality",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, text, {_SQL_TOKENS} AS t,
+  SELECT doc_id, text, {SQL_TOKENS} AS t,
          length(text) AS n_char
   FROM documents
 ),
@@ -274,36 +206,8 @@ def txt_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txt_langid",
-    oracle="""
-WITH scored AS (
-  SELECT doc_id, lang AS actual_lang,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['the','a','value','table','row'])) AS s_en,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['der','die','das','und'])) AS s_de,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['le','la','et','les'])) AS s_fr,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['el','la','los','que'])) AS s_es,
-         len(list_intersect(list_distinct(list_transform(
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''), y -> lower(y))),
-             ['de','shi','bu'])) AS s_zh
-  FROM documents
-),
-pred AS (
-  SELECT doc_id, actual_lang,
-         CASE WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-              WHEN s_de > 0 AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
-              WHEN s_fr > 0 AND s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-              WHEN s_es > 0 AND s_es >= s_zh THEN 'es'
-              WHEN s_zh > 0 THEN 'zh'
-              ELSE 'unknown' END AS predicted_lang
-  FROM scored
-)
+    oracle=f"""
+WITH {SQL_LANGID_PRED.lstrip()}
 SELECT predicted_lang, actual_lang, count(*) AS n
 FROM pred GROUP BY 1, 2 ORDER BY predicted_lang, actual_lang
 """,
@@ -329,10 +233,10 @@ def txt_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_fingerprint",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents WHERE doc_id < 300
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents WHERE doc_id < 300
 ),
 hashed AS (
-  SELECT doc_id, list_transform(t, tok -> {_SQL_MD5INT.format(x='tok')}) AS hs FROM base
+  SELECT doc_id, list_transform(t, tok -> {SQL_MD5INT.format(x='tok')}) AS hs FROM base
 )
 SELECT doc_id,
        list_reduce(list_prepend(0::bigint, hs), (a, b) -> (a * 31 + b) % 1000000007) AS fp
@@ -383,45 +287,16 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.brute_force_topk(emb, queries, k=5)
 
 
-def _sql_lsh_sig(
-    table: int,
-    num_planes: int = 8,
-    planes_sql: str | None = None,
-    min_planes: int = 8,
-) -> str:
-    """DuckDB twin of operators/similarity.lsh_signature: bit-packed
-    random-hyperplane signature with md5-parity ±1 components. DuckDB
-    lambda indexes are 1-based, hence (i-1).
-
-    ``planes_sql`` mirrors _signature_sql's runtime-conditional width:
-    plane terms at index >= ``min_planes`` short-circuit to 0 when the
-    index is at or above the runtime plane count (DuckDB evaluates CASE
-    branches lazily on the selection vector, so unused planes cost one
-    integer comparison, not a dot product)."""
-    parts = []
-    for p in range(num_planes):
-        sign = (
-            f"(CASE WHEN ('0x' || substr(md5('t{table}_plane{p}_' || (i-1)), 1, 8))::bigint"
-            " % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-        )
-        proj = f"list_sum(list_transform(v, (x,i) -> x * {sign}))"
-        term = f"(CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END)"
-        if planes_sql is not None and p >= min_planes:
-            term = f"(CASE WHEN {p} < {planes_sql} THEN {term} ELSE 0 END)"
-        parts.append(term)
-    return "(" + " + ".join(parts) + ")"
-
-
 @register(
     "sim_lsh_ann",
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
 sigs AS (
   SELECT vec_id, v,
-         {_sql_lsh_sig(0)} AS s0,
-         {_sql_lsh_sig(1)} AS s1,
-         {_sql_lsh_sig(2)} AS s2,
-         {_sql_lsh_sig(3)} AS s3
+         {sql_lsh_sig(0)} AS s0,
+         {sql_lsh_sig(1)} AS s1,
+         {sql_lsh_sig(2)} AS s2,
+         {sql_lsh_sig(3)} AS s3
   FROM e
 ),
 b AS (
@@ -433,23 +308,7 @@ cand AS (
   FROM b q JOIN b c ON q.tbl = c.tbl AND q.sig = c.sig
   WHERE q.vec_id < 3 AND c.vec_id <> q.vec_id
 ),
-scored AS (
-  SELECT query_id, match_id,
-         round(list_inner_product(qe.v, ce.v)
-               / (sqrt(list_inner_product(qe.v, qe.v)) * sqrt(list_inner_product(ce.v, ce.v))),
-               6) AS cos_sim
-  FROM cand
-  JOIN e qe ON qe.vec_id = query_id
-  JOIN e ce ON ce.vec_id = match_id
-),
-ranked AS (
-  SELECT query_id, match_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, match_id) AS rnk
-  FROM scored
-)
-SELECT query_id, match_id, cos_sim, rnk FROM ranked WHERE rnk <= 5
-ORDER BY query_id, rnk
-""",
+{sql_cosine_rerank(5)}""",
     doc="ANN top-k via random-hyperplane LSH (8 md5-derived planes, 4 "
     "OR-amplified tables): signature equi-join replaces the cross join. "
     "Hyperplanes are md5-parity ±1 and projections fold left-to-right, "
@@ -490,54 +349,10 @@ def txt_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _sql_adaptive_cand(
-    src: str = "embeddings", num_tables: int = 4, max_bucket: int = 20,
-    materialized: bool = False,
-) -> str:
-    """DuckDB twin of operators/similarity.lsh_candidate_vec_pairs:
-    CTEs ``e`` (vec_id, label, v), ``np`` (adaptive plane count from the
-    corpus size), signature/bucket/cap stages, ending in ``cand``
-    (id_a < id_b, distinct). Plane terms at or above the runtime plane
-    count short-circuit to 0 inside the signature expression (bit p
-    depends only on hyperplane p), so the bucket id IS the
-    adaptive-width signature — same construction as the Spark side, no
-    post-hoc mask. Width ceiling is 48 planes (round 7: the old
-    16-plane clamp was a recall cliff past ~1.3M vectors).
-    ``materialized`` pins the bucket/cand CTEs with MATERIALIZED —
-    required when the chain feeds a RECURSIVE consumer, where DuckDB's
-    default inlining would re-evaluate the signature stage per closure
-    iteration (the q_graph_kcore lesson)."""
-    m = "MATERIALIZED " if materialized else ""
-    sig_cols = ",\n         ".join(
-        f"{_sql_lsh_sig(t, 48, planes_sql='planes')} AS s{t}"
-        for t in range(num_tables)
-    )
-    tbls = ", ".join(str(t) for t in range(num_tables))
-    ss = ", ".join(f"s{t}" for t in range(num_tables))
-    return f"""e AS (SELECT vec_id, label, embedding::double[] AS v FROM {src}),
-np AS (SELECT least(48, greatest(8, cast(ceil(log2(count(*))) AS int) - 1)) AS planes
-       FROM e),
-sigs AS (
-  SELECT vec_id,
-         {sig_cols}
-  FROM e, np
-),
-b AS (
-  SELECT vec_id, tbl, sig AS bkt
-  FROM (SELECT vec_id, unnest([{tbls}]) AS tbl, unnest([{ss}]) AS sig FROM sigs)
-),
-small AS {m}(SELECT tbl, bkt FROM b GROUP BY tbl, bkt HAVING count(*) <= {max_bucket}),
-bs AS {m}(SELECT b.* FROM b JOIN small USING (tbl, bkt)),
-cand AS {m}(
-  SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-  FROM bs a JOIN bs c ON a.tbl = c.tbl AND a.bkt = c.bkt AND a.vec_id < c.vec_id
-)"""
-
-
 @register(
     "dd_embedding_neardup",
     oracle=f"""
-WITH {_sql_adaptive_cand()},
+WITH {sql_adaptive_cand()},
 scored AS (
   SELECT id_a, id_b,
          round(list_cosine_similarity(ea.v, eb.v), 6) AS cos
@@ -568,7 +383,7 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dd_semantic_dedup",
     oracle=f"""
-WITH RECURSIVE {_sql_adaptive_cand(materialized=True)},
+WITH RECURSIVE {sql_adaptive_cand(materialized=True)},
 sem AS MATERIALIZED (
   SELECT id_a, id_b FROM (
     SELECT id_a, id_b,
@@ -631,82 +446,6 @@ def dd_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_IVF_MODEL = """e AS (
-  SELECT vec_id,
-         list_transform(embedding::double[],
-                        x -> cast(round(x * 10000, 0) AS bigint)) AS qv
-  FROM embeddings
-),
-seeds AS (
-  SELECT cid, qv FROM (
-    SELECT qv,
-           row_number() OVER (
-             ORDER BY ('0x' || substr(md5(cast(vec_id AS varchar)), 1, 8))::bigint,
-                      vec_id) - 1 AS cid
-    FROM e
-  ) WHERE cid < 8
-),
-el AS (
-  SELECT e.vec_id, g.i AS pos, qv[g.i] AS v
-  FROM e, generate_series(1, 64) AS g(i)
-),
-c0 AS (
-  SELECT cid, g.i AS pos, qv[g.i] AS m
-  FROM seeds, generate_series(1, 64) AS g(i)
-),
-d1 AS (
-  SELECT el.vec_id, c.cid, sum((el.v - c.m) * (el.v - c.m)) AS d
-  FROM el JOIN c0 c ON c.pos = el.pos
-  GROUP BY el.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-    FROM d1
-  ) WHERE rn = 1
-),
-u1 AS (
-  SELECT a1.cid, el.pos, cast(sum(el.v) AS bigint) AS s, count(*) AS n
-  FROM a1 JOIN el ON el.vec_id = a1.vec_id
-  GROUP BY a1.cid, el.pos
-),
-c1 AS (
-  SELECT c0.cid, c0.pos, coalesce(u1.s // u1.n, c0.m) AS m
-  FROM c0 LEFT JOIN u1 ON u1.cid = c0.cid AND u1.pos = c0.pos
-),
-d2 AS (
-  SELECT el.vec_id, c.cid, sum((el.v - c.m) * (el.v - c.m)) AS d
-  FROM el JOIN c1 c ON c.pos = el.pos
-  GROUP BY el.vec_id, c.cid
-),
-a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-    FROM d2
-  ) WHERE rn = 1
-),
-u2 AS (
-  SELECT a2.cid, el.pos, cast(sum(el.v) AS bigint) AS s, count(*) AS n
-  FROM a2 JOIN el ON el.vec_id = a2.vec_id
-  GROUP BY a2.cid, el.pos
-),
-c2 AS (
-  SELECT c1.cid, c1.pos, coalesce(u2.s // u2.n, c1.m) AS m
-  FROM c1 LEFT JOIN u2 ON u2.cid = c1.cid AND u2.pos = c1.pos
-),
-df AS (
-  SELECT el.vec_id, c.cid, sum((el.v - c.m) * (el.v - c.m)) AS d
-  FROM el JOIN c2 c ON c.pos = el.pos
-  GROUP BY el.vec_id, c.cid
-),
-af AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-    FROM df
-  ) WHERE rn = 1
-)"""
-
-
 @register(
     "sim_ivf_ann",
     # Fully oracle-checked since round 3: the Lloyd iterations run in
@@ -716,7 +455,7 @@ af AS (
     # whole build+search below: same seeds (md5 ordering), two unrolled
     # Lloyd rounds, same probe selection, same integer-L2 re-rank.
     oracle=f"""
-WITH {_SQL_IVF_MODEL},
+WITH {SQL_IVF_MODEL},
 probes AS (
   SELECT query_id, cid FROM (
     SELECT vec_id AS query_id, cid,
@@ -803,79 +542,17 @@ def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_ORACLE_ROUNDS = 25  # MUST equal operators/graph.connected_components max_iter
-
-
-def _sql_bounded_cc(rounds: int = _CC_ORACLE_ROUNDS) -> str:
-    """CTE chain ``l0..l{rounds}`` + ``comp(node, component)``: synchronous
-    min-label propagation with the SAME round bound as
-    operators/graph.connected_components (max_iter=25), over a CTE
-    ``edges(u, v)`` that must already be symmetric.
-
-    Why bounded-round instead of the old ``WITH RECURSIVE`` transitive
-    closure (VERDICT r8 item 4): the closure materializes (node, label)
-    for every label whose origin is REACHABLE — O(sum comp_size^2) rows —
-    which is infeasible on the 35,656-node component the skew1.0 Zipf
-    panel chains together (1.3e9 rows; the round-7 documented gap). One
-    per-round min() aggregation keeps each round LINEAR in |edges|, so
-    the full-registry skew1.0 sweep can replay this oracle. Semantics:
-    after k synchronous rounds label(v) = min{u : dist(u, v) <= k}, which
-    is exactly what the engine's bounded loop computes — both sides now
-    produce the identical bounded fixed point even on a component whose
-    diameter exceeds the bound (equal to true components whenever the
-    diameter fits, i.e. on every certified panel)."""
-    parts = [
-        "l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM edges)"
-    ]
-    for i in range(rounds):
-        parts.append(
-            f"""l{i + 1} AS MATERIALIZED (
-  SELECT n.node, least(n.label, coalesce(m.nmin, n.label)) AS label
-  FROM l{i} n LEFT JOIN (
-    SELECT e.u, min(l.label) AS nmin
-    FROM edges e JOIN l{i} l ON l.node = e.v
-    GROUP BY e.u
-  ) m ON m.u = n.node
-)"""
-        )
-    parts.append(
-        f"comp AS (SELECT node, label AS component FROM l{rounds})"
-    )
-    return ",\n".join(parts)
-
-
 @register(
     "dd_cc_clusters",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_minhash_sig('TRUE')},
+{sql_lsh_pairs()},
 edges AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
   SELECT id_b, id_a FROM pairs
 ),
-{_sql_bounded_cc()}
+{sql_bounded_cc()}
 SELECT component, count(*) AS cluster_size
 FROM comp GROUP BY component ORDER BY component
 """,
@@ -884,7 +561,7 @@ FROM comp GROUP BY component ORDER BY component
     "propagation (operators/graph.py), one shuffle per round, "
     "localCheckpoint lineage truncation. Verified against a union-find "
     "oracle in tests/test_graph.py AND a DuckDB BOUNDED-ROUND min-label "
-    "twin (_sql_bounded_cc, round-9: same 25-round bound as the engine, "
+    "twin (sql_bounded_cc, round-9: same 25-round bound as the engine, "
     "linear per round — replaces the transitive-closure oracle that was "
     "O(sum comp^2) and infeasible on the skew1.0 35k-node component). "
     "Round-4: the candidate graph carries the "
@@ -908,99 +585,31 @@ def dd_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_sig_over(src: str, num_hashes: int = 8) -> str:
-    """Like _sql_minhash_sig but over an arbitrary relation (CTE name)."""
-    parts = []
-    for i in range(num_hashes):
-        seeded = "'" + str(i) + "_' || tok"
-        parts.append(f"min({_SQL_MD5INT.format(x=seeded)}) AS h{i}")
-    hashes = ",\n         ".join(parts)
-    return f"""
-p_toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS tok
-  FROM {src}
-),
-p_sig AS (
-  SELECT doc_id,
-         {hashes}
-  FROM p_toks GROUP BY doc_id
-)"""
-
-
-_SQL_LANGID_CASE = """
-         CASE WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-              WHEN s_de > 0 AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
-              WHEN s_fr > 0 AND s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-              WHEN s_es > 0 AND s_es >= s_zh THEN 'es'
-              WHEN s_zh > 0 THEN 'zh'
-              ELSE 'unknown' END
-"""
-
-
 @register(
     "pipe_llm_corpus",
     oracle=f"""
-WITH gated AS (
-  SELECT * FROM documents
-  WHERE len({_SQL_TOKENS}) >= 5
-    AND round(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))
-              / greatest(length(text), 1), 6) <= 0.3
-    AND round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-              / greatest(length(text), 1), 6) <= 0.5
-),
-exact AS (
-  SELECT g.* FROM gated g
-  JOIN (SELECT text AS k_text, min(doc_id) AS keep_id FROM gated GROUP BY text) k
-    ON g.text = k.k_text AND g.doc_id = k.keep_id
-),
-{_sql_minhash_sig_over('exact').lstrip()},
-p_bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM p_sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM p_sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM p_sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM p_sig
-),
-p_small AS MATERIALIZED (
-  SELECT band_idx, band_val FROM p_bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-p_sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM p_bands b JOIN p_small USING (band_idx, band_val)
-),
-losers AS (
-  SELECT DISTINCT b.doc_id
-  FROM p_sb a JOIN p_sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_corpus_funnel()},
 clean AS (
   SELECT e.* FROM exact e WHERE e.doc_id NOT IN (SELECT doc_id FROM losers)
 ),
 scored AS (
   SELECT clean.*,
-         list_distinct(list_transform({_SQL_TOKENS}, y -> lower(y))) AS lt
+         list_distinct(list_transform({SQL_TOKENS}, y -> lower(y))) AS lt
   FROM clean
 ),
 enriched AS (
   SELECT doc_id, text, lang, source, n_chars,
-         len({_SQL_TOKENS}) AS n_ws_tokens,
+         len({SQL_TOKENS}) AS n_ws_tokens,
          len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^ A-Za-z0-9]+')) AS n_bpe_tokens,
-         len(list_intersect(lt, ['the','a','value','table','row'])) AS s_en,
-         len(list_intersect(lt, ['der','die','das','und'])) AS s_de,
-         len(list_intersect(lt, ['le','la','et','les'])) AS s_fr,
-         len(list_intersect(lt, ['el','la','los','que'])) AS s_es,
-         len(list_intersect(lt, ['de','shi','bu'])) AS s_zh,
+{sql_langid_scores('lt')},
          list_reduce(
            list_prepend(0::bigint,
-             list_transform({_SQL_TOKENS}, tok -> {_SQL_MD5INT.format(x='tok')})),
+             list_transform({SQL_TOKENS}, tok -> {SQL_MD5INT.format(x='tok')})),
            (a, b) -> (a * 31 + b) % 1000000007) AS doc_fingerprint
   FROM scored
 )
 SELECT doc_id, text, lang, source, n_chars, n_ws_tokens, n_bpe_tokens,
-       {_SQL_LANGID_CASE} AS lang_pred,
+       {SQL_LANGID_CASE} AS lang_pred,
        doc_fingerprint
 FROM enriched
 ORDER BY doc_id
@@ -1105,7 +714,7 @@ def dd_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_vocab",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
 ),
 per_doc AS (
   SELECT token, doc_id, count(*) AS c FROM tok GROUP BY 1, 2
@@ -1144,7 +753,7 @@ def txt_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_repetition",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -1367,7 +976,7 @@ def txt_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_contamination",
     oracle=f"""
 WITH corpus AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 sh AS (
   SELECT doc_id,
@@ -1674,7 +1283,7 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_chunking",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents WHERE doc_id < 200
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents WHERE doc_id < 200
 ),
 chunked AS (
   SELECT doc_id, len(t) AS n_tok,
@@ -1719,7 +1328,7 @@ def txt_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_segment_dedup",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 d AS (
   SELECT doc_id, cast(len(t) // 8 AS bigint) AS n_seg, t
@@ -1797,10 +1406,10 @@ def dd_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_importance_dsir",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS tok FROM documents
 ),
 hashed AS (
-  SELECT doc_id, {_SQL_MD5INT.format(x='tok')} % 4096 AS bucket FROM toks
+  SELECT doc_id, {SQL_MD5INT.format(x='tok')} % 4096 AS bucket FROM toks
 ),
 lam AS (
   SELECT bucket,
@@ -1878,21 +1487,27 @@ def txt_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mixture_weights(docs: DataFrame) -> DataFrame:
+    """(source, n_docs, total_tokens, weight): per-source BPE-ish token
+    totals and the temperature-damped weight floor(total^0.7 + 0.5)."""
+    from p6_spark.operators.text import bpe_ish_token_count
+
+    per_src = docs.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(bpe_ish_token_count(F.col("text")).cast("long")).alias("total_tokens"),
+    )
+    return per_src.withColumn(
+        "weight",
+        F.floor(F.pow(F.col("total_tokens").cast("double"), F.lit(0.7)) + F.lit(0.5)).cast(
+            "long"
+        ),
+    )
+
+
 @register(
     "txt_mixture_plan",
-    oracle="""
-WITH per_src AS (
-  SELECT source,
-         cast(count(*) AS bigint) AS n_docs,
-         cast(sum(len(regexp_extract_all(text,
-              ' ?[A-Za-z]+| ?[0-9]+| ?[^ A-Za-z0-9]+'))) AS bigint) AS total_tokens
-  FROM documents GROUP BY source
-),
-w AS (
-  SELECT source, n_docs, total_tokens,
-         cast(floor(pow(total_tokens::double, 0.7) + 0.5) AS bigint) AS weight
-  FROM per_src
-)
+    oracle=f"""
+WITH {SQL_MIXTURE_WEIGHTS}
 SELECT source, n_docs, total_tokens, weight,
        (weight * 1000000) // (SELECT cast(sum(weight) AS bigint) FROM w) AS share_x1e6,
        (5000000 * ((weight * 1000000) // (SELECT cast(sum(weight) AS bigint) FROM w)))
@@ -1916,19 +1531,8 @@ ORDER BY source
 def txt_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from p6_spark.operators.text import bpe_ish_token_count
-
     docs = load_table(spark, sf_dir, "documents")
-    per_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(bpe_ish_token_count(F.col("text")).cast("long")).alias("total_tokens"),
-    )
-    w = per_src.withColumn(
-        "weight",
-        F.floor(F.pow(F.col("total_tokens").cast("double"), F.lit(0.7)) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
+    w = _mixture_weights(docs)
     total_w = F.sum("weight").over(Window.partitionBy())
     share = F.expr("(weight * 1000000) div total_w")
     return (
@@ -2088,7 +1692,7 @@ def sim_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_lm_score",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
 ),
 cnt AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
 tot AS (SELECT cast(sum(c) AS bigint) AS t FROM cnt),
@@ -2158,7 +1762,7 @@ def txt_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_token_entropy",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
 ),
 per AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
 agg AS (
@@ -2238,23 +1842,7 @@ ORDER BY i, j
 )
 def sim_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 10000, 0).cast("long")
-    )
-    e = emb.select("vec_id", qv.alias("qv"))
-    # (i, v_i, tail) per position; tail = qv[i..end] so products v_i * v_j
-    # for j >= i expand without a join
-    rows = e.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "vi"), F.col("qv")
-    ).select(
-        (F.col("pos0") + 1).alias("i"),
-        "vi",
-        F.expr("slice(qv, pos0 + 1, size(qv) - pos0)").alias("tail"),
-    )
-    prods = rows.select(
-        "i",
-        F.posexplode(F.expr("transform(tail, x -> x * vi)")).alias("dj", "p"),
-    ).select("i", (F.col("i") + F.col("dj")).alias("j"), "p")
+    prods = sim.gram_products(emb)
     return (
         prods.groupBy("i", "j")
         .agg(F.sum("p").alias("gram"), F.count(F.lit(1)).alias("n"))
@@ -2335,35 +1923,14 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dd_cluster_best",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_minhash_sig('TRUE')},
+{sql_lsh_pairs()},
 edges AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
   SELECT id_b, id_a FROM pairs
 ),
-{_sql_bounded_cc()},
+{sql_bounded_cc()},
 ranked AS (
   SELECT comp.component, comp.node AS doc_id, d.n_chars,
          row_number() OVER (PARTITION BY comp.component
@@ -2383,7 +1950,7 @@ ORDER BY component
     "quality join + per-component ranking window: one extra broadcast-"
     "size join and one shuffle on component beyond the CC rounds. "
     "Oracle replays components via the BOUNDED-ROUND min-label twin "
-    "(_sql_bounded_cc — round-9, same skew1.0-feasibility fix as "
+    "(sql_bounded_cc — round-9, same skew1.0-feasibility fix as "
     "dd_cc_clusters) then applies the same window. "
     "Candidate graph carries the max_bucket=20 cap (see dd_cc_clusters).",
     tags=("dedup", "graph", "quality", "composition"),
@@ -2423,19 +1990,8 @@ def dd_cluster_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txt_mixture_sample",
-    oracle="""
-WITH per_src AS (
-  SELECT source,
-         cast(count(*) AS bigint) AS n_docs,
-         cast(sum(len(regexp_extract_all(text,
-              ' ?[A-Za-z]+| ?[0-9]+| ?[^ A-Za-z0-9]+'))) AS bigint) AS total_tokens
-  FROM documents GROUP BY source
-),
-w AS (
-  SELECT source, n_docs, total_tokens,
-         cast(floor(pow(total_tokens::double, 0.7) + 0.5) AS bigint) AS weight
-  FROM per_src
-),
+    oracle=f"""
+WITH {SQL_MIXTURE_WEIGHTS},
 rates AS (
   SELECT source, n_docs, total_tokens,
          least(1000000,
@@ -2474,16 +2030,7 @@ def txt_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6_spark.operators.text import bpe_ish_token_count, md5_int
 
     docs = load_table(spark, sf_dir, "documents")
-    per_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(bpe_ish_token_count(F.col("text")).cast("long")).alias("total_tokens"),
-    )
-    w = per_src.withColumn(
-        "weight",
-        F.floor(F.pow(F.col("total_tokens").cast("double"), F.lit(0.7)) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
+    w = _mixture_weights(docs)
     total_w = F.sum("weight").over(Window.partitionBy())
     rates = (
         w.withColumn("total_w", total_w)
@@ -2600,7 +2147,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_countmin_heavy",
     oracle=f"""
 WITH tok AS (
-  SELECT unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT unnest({SQL_TOKENS}) AS token FROM documents
 ),
 cnt AS (SELECT token, cast(count(*) AS bigint) AS true_count FROM tok GROUP BY 1),
 cells AS (
@@ -2680,9 +2227,9 @@ def q_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH base AS (
   SELECT doc_id, source, md5(text) AS content_md5,
          length(text) AS n_chars_m,
-         len({_SQL_TOKENS}) AS n_tokens,
+         len({SQL_TOKENS}) AS n_tokens,
          length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
-         len(list_filter({_SQL_TOKENS},
+         len(list_filter({SQL_TOKENS},
              x -> list_contains(['the','a','value','table','row'], lower(x)))) AS n_stop
   FROM documents
 ),
@@ -2783,7 +2330,7 @@ def txt_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_stutter_scrub",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS t FROM documents
 ),
 idx AS (
   SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
@@ -2847,7 +2394,7 @@ def txt_stutter_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_pmi_bigrams",
     oracle=f"""
 WITH base AS (
-  SELECT {_SQL_TOKENS} AS t FROM documents
+  SELECT {SQL_TOKENS} AS t FROM documents
 ),
 uni AS (
   SELECT unnest(t) AS tok FROM base
@@ -2949,7 +2496,7 @@ def txt_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH scored AS (
   SELECT doc_id, source,
-         len({_SQL_TOKENS}) AS n_tokens
+         len({SQL_TOKENS}) AS n_tokens
   FROM documents
 ),
 ranked AS (
@@ -3168,7 +2715,7 @@ def sim_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH base AS (
   SELECT doc_id, source, lang, n_chars,
          md5(text) AS content_md5,
-         len({_SQL_TOKENS}) AS n_tokens
+         len({SQL_TOKENS}) AS n_tokens
   FROM documents
 ),
 ranked AS (
@@ -3234,7 +2781,7 @@ def pipe_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH pairs AS (
   SELECT doc_id, tok, cast(count(*) AS bigint) AS c FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents
+    SELECT doc_id, unnest({SQL_TOKENS}) AS tok FROM documents
   ) GROUP BY 1, 2
 ),
 hashed AS (
@@ -3369,29 +2916,8 @@ def txt_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_triangles",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_minhash_sig('TRUE')},
+{sql_lsh_pairs(select='a.doc_id AS u, b.doc_id AS v')},
 deg AS (
   SELECT node, cast(count(*) AS bigint) AS degree FROM (
     SELECT u AS node FROM pairs UNION ALL SELECT v FROM pairs
@@ -3567,7 +3093,7 @@ def dd_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_skipgram_pairs",
     oracle=f"""
 WITH base AS (
-  SELECT {_SQL_TOKENS} AS t FROM documents
+  SELECT {SQL_TOKENS} AS t FROM documents
 ),
 idx AS (
   SELECT t, unnest(generate_series(1, len(t))) AS i

@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _sql_minhash_sig
+from p6_spark.operators.similarity import pq_adc_lut, pq_code_array
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import sql_minhash_sig, sql_pq_codes, sql_pq_lut
 from p6_spark.sources.tables import load_table
 
 
@@ -237,27 +238,12 @@ def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product-quantization sign codes
 # ---------------------------------------------------------------------------
 
-_PQ_SUBSPACES = 8
-_PQ_DIMS = 8  # dims per subspace
-
-
-def _sql_pq_code(s: int) -> str:
-    bits = [
-        f"(CASE WHEN round(v[{s * _PQ_DIMS + j + 1}] * 1000, 0) > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_PQ_DIMS)
-    ]
-    return "(" + " + ".join(bits) + ")"
-
 
 @register(
     "sim_pq_codes",
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
-codes AS (
-  SELECT vec_id, sub, code FROM e,
-    LATERAL (SELECT unnest([{", ".join(str(s) for s in range(_PQ_SUBSPACES))}]) AS sub,
-                    unnest([{", ".join(_sql_pq_code(s) for s in range(_PQ_SUBSPACES))}]) AS code) c
-),
+{sql_pq_codes()},
 per_code AS (
   SELECT sub, code, count(*) AS n FROM codes GROUP BY sub, code
 ),
@@ -288,21 +274,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     e = emb.select("vec_id", v.alias("v"))
-    code_cols = []
-    for s in range(_PQ_SUBSPACES):
-        bits = [
-            F.when(
-                F.round(F.col("v")[s * _PQ_DIMS + j] * 1000, 0) > 0, F.lit(1 << j)
-            ).otherwise(0)
-            for j in range(_PQ_DIMS)
-        ]
-        code = bits[0]
-        for b in bits[1:]:
-            code = code + b
-        code_cols.append(
-            F.struct(F.lit(s).alias("sub"), code.alias("code"))
-        )
-    codes = e.select(F.explode(F.array(*code_cols)).alias("c")).select(
+    codes = e.select(F.explode(pq_code_array(F.col("v"))).alias("c")).select(
         F.col("c.sub").alias("sub"), F.col("c.code").alias("code")
     )
     per_code = codes.groupBy("sub", "code").agg(F.count(F.lit(1)).alias("n"))
@@ -336,26 +308,8 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_pq_search",
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
-codes AS (
-  SELECT vec_id, sub, code FROM e,
-    LATERAL (SELECT unnest([{", ".join(str(s) for s in range(_PQ_SUBSPACES))}]) AS sub,
-                    unnest([{", ".join(_sql_pq_code(s) for s in range(_PQ_SUBSPACES))}]) AS code) c
-),
-q AS (
-  SELECT vec_id AS qid,
-         list_transform(v, x -> cast(round(x * 1000, 0) AS bigint)) AS qi
-  FROM e WHERE vec_id < 3
-),
-lut AS (
-  SELECT qid, s.sub, cc.code,
-         list_sum(list_transform(generate_series(0, {_PQ_DIMS - 1}), j ->
-           CASE WHEN ((cc.code >> j) % 2) = 1
-                THEN qi[s.sub * {_PQ_DIMS} + j + 1]
-                ELSE -qi[s.sub * {_PQ_DIMS} + j + 1] END)) AS adc
-  FROM q,
-       (SELECT unnest([{", ".join(str(s) for s in range(_PQ_SUBSPACES))}]) AS sub) s,
-       (SELECT unnest(generate_series(0, 255)) AS code) cc
-),
+{sql_pq_codes()},
+{sql_pq_lut()},
 scored AS (
   SELECT l.qid AS query_id, c.vec_id AS match_id,
          cast(sum(l.adc) AS bigint) AS adc_x1000
@@ -400,20 +354,8 @@ def sim_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # corpus side: 8 (sub, code) rows per vector — the only thing the
     # scan carries (at 100 TB this is the codes file, not the floats)
-    code_cols = []
-    for s in range(_PQ_SUBSPACES):
-        bits = [
-            F.when(
-                F.round(F.col("v")[s * _PQ_DIMS + j] * 1000, 0) > 0, F.lit(1 << j)
-            ).otherwise(0)
-            for j in range(_PQ_DIMS)
-        ]
-        code = bits[0]
-        for b in bits[1:]:
-            code = code + b
-        code_cols.append(F.struct(F.lit(s).alias("sub"), code.alias("code")))
     codes = e.select(
-        "vec_id", F.explode(F.array(*code_cols)).alias("c")
+        "vec_id", F.explode(pq_code_array(F.col("v"))).alias("c")
     ).select("vec_id", F.col("c.sub").alias("sub"), F.col("c.code").alias("code"))
 
     # query side: x1000-quantized int vectors -> 8x256 ADC lookup table
@@ -423,28 +365,7 @@ def sim_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(v, x -> cast(round(x * 1000, 0) as bigint))"
         ).alias("qi"),
     )
-    lut = (
-        q.crossJoin(
-            F.broadcast(
-                spark.range(_PQ_SUBSPACES)
-                .select(F.col("id").cast("int").alias("sub"))
-                .crossJoin(
-                    spark.range(256).select(F.col("id").cast("int").alias("code"))
-                )
-            )
-        )
-        .select(
-            "qid",
-            "sub",
-            "code",
-            F.expr(
-                f"aggregate(sequence(0, {_PQ_DIMS - 1}), cast(0 as bigint),"
-                " (acc, j) -> acc + CASE WHEN ((code >> j) % 2) = 1"
-                f" THEN qi[sub * {_PQ_DIMS} + j]"
-                f" ELSE -qi[sub * {_PQ_DIMS} + j] END)"
-            ).alias("adc"),
-        )
-    )
+    lut = pq_adc_lut(spark, q)
     scored = (
         codes.join(F.broadcast(lut), ["sub", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
@@ -504,7 +425,7 @@ def _sql_band_pairs(band_size: int) -> str:
 @register(
     "dd_lsh_tuning",
     oracle=f"""
-WITH {_sql_minhash_sig("doc_id < 1000").lstrip().lstrip(chr(10))},
+WITH {sql_minhash_sig("doc_id < 1000").lstrip().lstrip(chr(10))},
 est AS MATERIALIZED (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          ((CASE WHEN a.h0 = b.h0 THEN 1 ELSE 0 END) + (CASE WHEN a.h1 = b.h1 THEN 1 ELSE 0 END)

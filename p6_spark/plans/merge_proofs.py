@@ -13,10 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MD5INT, SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
-_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
-_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 _HLL_M = 256
 _HLL_ALPHA_X1E6 = 718273  # 0.7213 / (1 + 1.079/256), same literal as eval_sketch
@@ -35,8 +34,8 @@ _HLL_RHO = "max(CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END)"
 WITH k AS (SELECT DISTINCT source, md5(text) AS key FROM documents),
 h AS (
   SELECT source,
-         {_MD5INT.format(x="'hllm_' || key")} // 16777216 AS bucket,
-         {_MD5INT.format(x="'hllm_' || key")} % 16777216 AS w
+         {SQL_MD5INT.format(x="'hllm_' || key")} // 16777216 AS bucket,
+         {SQL_MD5INT.format(x="'hllm_' || key")} % 16777216 AS w
   FROM k
 ),
 regs AS (
@@ -225,7 +224,7 @@ _ZIPF_TOP = 500
 @register(
     "q_zipf_fit",
     oracle=f"""
-WITH tok AS (SELECT unnest({_TOKENS}) AS t FROM documents),
+WITH tok AS (SELECT unnest({SQL_TOKENS}) AS t FROM documents),
 cnt AS (SELECT t, count(*) AS c FROM tok GROUP BY t),
 rk AS (
   SELECT row_number() OVER (ORDER BY c DESC, t) AS r, c

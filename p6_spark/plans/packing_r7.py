@@ -12,10 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6_spark.pipelines.llm_corpus import PACK_BUDGET, pack_sequences
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_PACK_HISTOGRAM
 from p6_spark.sources.tables import load_table
-
-_PACK_BUDGET = 4096  # chars per packed training sequence (token proxy)
 
 
 @register(
@@ -37,25 +37,17 @@ d AS (
 ),
 assigned AS (
   SELECT doc_id, n_chars,
-         (cum - n_chars) // {_PACK_BUDGET} AS seq_id,
-         CASE WHEN (cum - n_chars) // {_PACK_BUDGET} <> (cum - 1) // {_PACK_BUDGET}
+         (cum - n_chars) // {PACK_BUDGET} AS seq_id,
+         CASE WHEN (cum - n_chars) // {PACK_BUDGET} <> (cum - 1) // {PACK_BUDGET}
               THEN 1 ELSE 0 END AS straddles
   FROM d
 ),
-per_seq AS (
-  SELECT seq_id, count(*) AS docs_in_seq, sum(straddles) AS n_straddle
-  FROM assigned GROUP BY seq_id
-)
-SELECT cast(docs_in_seq AS bigint) AS docs_in_seq,
-       cast(count(*) AS bigint) AS n_seqs,
-       cast(sum(n_straddle) AS bigint) AS n_straddlers
-FROM per_seq
-GROUP BY docs_in_seq
+{SQL_PACK_HISTOGRAM}
 ORDER BY docs_in_seq
 """,
     doc="Greedy sequence packing for LLM training batches: documents "
     "stream in doc_id order into fixed "
-    f"{_PACK_BUDGET}-char windows (chars as the deterministic token "
+    f"{PACK_BUDGET}-char windows (chars as the deterministic token "
     "proxy — the real tokenizer swaps in per deployment); a document "
     "belongs to the window its START offset falls in, and documents "
     "whose span crosses a window boundary are counted as straddlers "
@@ -79,8 +71,6 @@ ORDER BY docs_in_seq
     tags=("pipeline", "packing", "training", "window", "fixed-point"),
 )
 def pipe_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from p6_spark.operators.ranking import two_phase_rank
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         # loud-failure guard (ADVICE r7): n_chars < 1 breaks the straddle
@@ -97,27 +87,7 @@ def pipe_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("n_chars"),
     )
-    ranked = two_phase_rank(
-        docs, [F.asc("doc_id")], F.col("doc_id"), cum_cols=["n_chars"]
-    )
-    assigned = ranked.select(
-        "doc_id",
-        "n_chars",
-        F.expr(f"(cum_n_chars - n_chars) div {_PACK_BUDGET}").alias("seq_id"),
-        F.when(
-            F.expr(
-                f"(cum_n_chars - n_chars) div {_PACK_BUDGET}"
-                f" <> (cum_n_chars - 1) div {_PACK_BUDGET}"
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("straddles"),
-    )
-    per_seq = assigned.groupBy("seq_id").agg(
-        F.count(F.lit(1)).alias("docs_in_seq"),
-        F.sum("straddles").alias("n_straddle"),
-    )
+    per_seq = pack_sequences(docs)
     return (
         per_seq.groupBy("docs_in_seq")
         .agg(

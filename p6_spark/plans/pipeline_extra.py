@@ -12,9 +12,9 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_PURCHASE_TOUCHES, SQL_TOKENS, sql_corpus_funnel
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -26,7 +26,7 @@ _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')
     "txt_vocab_coverage",
     oracle=f"""
 WITH toks AS (
-  SELECT unnest({_SQL_TOKENS}) AS tok FROM documents
+  SELECT unnest({SQL_TOKENS}) AS tok FROM documents
 ),
 vocab AS (
   SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
@@ -171,15 +171,8 @@ def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_attribution_last_touch",
-    oracle="""
-WITH purchases AS (
-  SELECT user_id, ts AS p_ts, event_id AS p_id
-  FROM events WHERE event_type = 'purchase'
-),
-touches AS (
-  SELECT user_id, ts AS t_ts, event_id AS t_id, event_type AS channel
-  FROM events WHERE event_type IN ('view', 'click', 'signup')
-),
+    oracle=f"""
+WITH {SQL_PURCHASE_TOUCHES},
 joined AS (
   SELECT p.p_id, t.channel,
          row_number() OVER (PARTITION BY p.p_id
@@ -255,45 +248,8 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _funnel_oracle() -> str:
-    from p6_spark.plans.llm_ops import _sql_minhash_sig_over
-
     return f"""
-WITH gated AS (
-  SELECT * FROM documents
-  WHERE len({_SQL_TOKENS}) >= 5
-    AND round(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))
-              / greatest(length(text), 1), 6) <= 0.3
-    AND round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-              / greatest(length(text), 1), 6) <= 0.5
-),
-exact AS (
-  SELECT g.* FROM gated g
-  JOIN (SELECT text AS k_text, min(doc_id) AS keep_id FROM gated GROUP BY text) k
-    ON g.text = k.k_text AND g.doc_id = k.keep_id
-),
-{_sql_minhash_sig_over('exact').lstrip()},
-p_bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM p_sig
-  UNION ALL
-  SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM p_sig
-  UNION ALL
-  SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM p_sig
-  UNION ALL
-  SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM p_sig
-),
-p_small AS MATERIALIZED (
-  SELECT band_idx, band_val FROM p_bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-p_sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM p_bands b JOIN p_small USING (band_idx, band_val)
-),
-losers AS (
-  SELECT DISTINCT b.doc_id
-  FROM p_sb a JOIN p_sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
+WITH {sql_corpus_funnel()},
 clean AS (SELECT e.* FROM exact e WHERE e.doc_id NOT IN (SELECT doc_id FROM losers))
 SELECT r.source,
        r.n_raw,

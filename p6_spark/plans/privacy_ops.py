@@ -11,9 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MD5INT
 from p6_spark.sources.tables import load_table
 
-_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -93,7 +93,7 @@ WITH counts AS (
 ),
 noise AS (
   SELECT c_nationkey, n,
-         ({_MD5INT.format(x="'dp_' || cast(c_nationkey AS varchar)")})
+         ({SQL_MD5INT.format(x="'dp_' || cast(c_nationkey AS varchar)")})
            % 2000001 - 1000000 AS u
   FROM counts
 ),

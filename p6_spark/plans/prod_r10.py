@@ -26,12 +26,17 @@ identically in both engines.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from p6_spark.audit import dead_letter_rows
-from p6_spark.plans.llm_ops import _SQL_TOKENS
+from p6_spark.pipelines.llm_corpus import (
+    PACK_BUDGET,
+    pack_sequences,
+    percentile_prune_report,
+    quality_budget_rank,
+)
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_LANG_QUALITY_CUM, SQL_PACK_HISTOGRAM, SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -43,7 +48,7 @@ from p6_spark.sources.tables import load_table
     "pipe_quality_budget_cut_deadletter",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, lang, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, lang, {SQL_TOKENS} AS t FROM documents
 ),
 clean AS (
   SELECT doc_id, lang, cast(len(t) AS bigint) AS n_tok,
@@ -96,7 +101,6 @@ ORDER BY status, lang
 def pipe_quality_budget_cut_deadletter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from p6_spark.operators.ranking import two_phase_rank
     from p6_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -122,14 +126,7 @@ def pipe_quality_budget_cut_deadletter(
             "qscore_x1e6"
         ),
     )
-    ranked = two_phase_rank(
-        scored,
-        [F.desc("qscore_x1e6"), F.asc("doc_id")],
-        F.col("qscore_x1e6"),
-        descending=True,
-        cum_cols=["n_tok"],
-    )
-    budget = scored.agg(F.expr("sum(n_tok) div 4").alias("budget"))
+    ranked, budget = quality_budget_rank(scored)
     manifest = (
         ranked.crossJoin(F.broadcast(budget))
         .groupBy(
@@ -165,7 +162,7 @@ def pipe_quality_budget_cut_deadletter(
     "pipe_percentile_prune_deadletter",
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, lang, {_SQL_TOKENS} AS t FROM documents
+  SELECT doc_id, lang, {SQL_TOKENS} AS t FROM documents
 ),
 scored AS (
   SELECT lang, cast(len(t) AS bigint) AS n_tok,
@@ -179,21 +176,7 @@ dead AS (
   SELECT lang, cast(count(*) AS bigint) AS n_deadletter
   FROM base WHERE NOT coalesce(len(t) >= 1, false) GROUP BY lang
 ),
-per_s AS (
-  SELECT lang, qs, cast(count(*) AS bigint) AS cnt,
-         cast(sum(n_tok) AS bigint) AS tok
-  FROM scored GROUP BY 1, 2
-),
-cum AS (
-  SELECT lang, qs, cnt, tok,
-         sum(cnt) OVER (PARTITION BY lang ORDER BY qs
-                        ROWS UNBOUNDED PRECEDING) AS cum_cnt,
-         sum(tok) OVER (PARTITION BY lang ORDER BY qs
-                        ROWS UNBOUNDED PRECEDING) AS cum_tok,
-         sum(cnt) OVER (PARTITION BY lang) AS nd,
-         sum(tok) OVER (PARTITION BY lang) AS tok_total
-  FROM per_s
-),
+{SQL_LANG_QUALITY_CUM},
 report AS (
   SELECT lang,
          cast(max(nd) AS bigint) AS n_docs,
@@ -258,41 +241,7 @@ def pipe_percentile_prune_deadletter(
         "n_tok",
         F.expr("_num div greatest(n_tok, cast(1 as bigint))").alias("qs"),
     )
-    per_s = scored.groupBy("lang", "qs").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("n_tok").alias("tok")
-    )
-    wc = W.partitionBy("lang").orderBy("qs").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    wl = W.partitionBy("lang")
-    cum = per_s.select(
-        "lang",
-        "qs",
-        F.sum("cnt").over(wc).alias("cum_cnt"),
-        F.sum("tok").over(wc).alias("cum_tok"),
-        F.sum("cnt").over(wl).alias("nd"),
-        F.sum("tok").over(wl).alias("tok_total"),
-    )
-    report = cum.groupBy("lang").agg(
-        F.max("nd").cast("long").alias("n_docs"),
-        F.max("tok_total").cast("long").alias("tok_total"),
-        F.expr(
-            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4 THEN qs END),"
-            " -1) AS bigint)"
-        ).alias("threshold_x1e6"),
-        F.expr(
-            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-            " THEN cum_cnt END), 0) AS bigint)"
-        ).alias("n_dropped"),
-        F.expr(
-            "cast(max(nd) - coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-            " THEN cum_cnt END), 0) AS bigint)"
-        ).alias("n_kept"),
-        F.expr(
-            "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-            " THEN cum_tok END), 0) AS bigint)"
-        ).alias("tok_dropped"),
-    )
+    report = percentile_prune_report(scored)
     dead_report = dead.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_deadletter")
     )
@@ -322,8 +271,6 @@ def pipe_percentile_prune_deadletter(
 # pipe_sequence_packing_deadletter — packing that drops rows, not runs
 # ---------------------------------------------------------------------------
 
-_PACK_BUDGET = 4096  # chars per packed sequence (mirrors packing_r7)
-
 
 @register(
     "pipe_sequence_packing_deadletter",
@@ -343,21 +290,13 @@ d AS (
 ),
 assigned AS (
   SELECT doc_id, n_chars,
-         (cum - n_chars) // {_PACK_BUDGET} AS seq_id,
-         CASE WHEN (cum - n_chars) // {_PACK_BUDGET}
-                   <> (cum - 1) // {_PACK_BUDGET}
+         (cum - n_chars) // {PACK_BUDGET} AS seq_id,
+         CASE WHEN (cum - n_chars) // {PACK_BUDGET}
+                   <> (cum - 1) // {PACK_BUDGET}
               THEN 1 ELSE 0 END AS straddles
   FROM d
 ),
-per_seq AS (
-  SELECT seq_id, count(*) AS docs_in_seq, sum(straddles) AS n_straddle
-  FROM assigned GROUP BY seq_id
-)
-SELECT cast(docs_in_seq AS bigint) AS docs_in_seq,
-       cast(count(*) AS bigint) AS n_seqs,
-       cast(sum(n_straddle) AS bigint) AS n_straddlers
-FROM per_seq
-GROUP BY docs_in_seq
+{SQL_PACK_HISTOGRAM}
 UNION ALL
 SELECT cast(-1 AS bigint), n_dead, cast(0 AS bigint)
 FROM dead WHERE n_dead > 0
@@ -382,31 +321,11 @@ ORDER BY docs_in_seq
 def pipe_sequence_packing_deadletter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from p6_spark.operators.ranking import two_phase_rank
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     clean, dead = dead_letter_rows(
         docs, F.col("n_chars").isNotNull() & (F.col("n_chars") >= 1)
     )
-    ranked = two_phase_rank(
-        clean, [F.asc("doc_id")], F.col("doc_id"), cum_cols=["n_chars"]
-    )
-    assigned = ranked.select(
-        F.expr(f"(cum_n_chars - n_chars) div {_PACK_BUDGET}").alias("seq_id"),
-        F.when(
-            F.expr(
-                f"(cum_n_chars - n_chars) div {_PACK_BUDGET}"
-                f" <> (cum_n_chars - 1) div {_PACK_BUDGET}"
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("straddles"),
-    )
-    per_seq = assigned.groupBy("seq_id").agg(
-        F.count(F.lit(1)).alias("docs_in_seq"),
-        F.sum("straddles").alias("n_straddle"),
-    )
+    per_seq = pack_sequences(clean)
     hist = per_seq.groupBy("docs_in_seq").agg(
         F.count(F.lit(1)).cast("long").alias("n_seqs"),
         F.sum("n_straddle").cast("long").alias("n_straddlers"),

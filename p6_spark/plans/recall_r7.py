@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.operators import similarity as sim
-from p6_spark.plans.llm_ops import _sql_adaptive_cand, _sql_lsh_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import sql_adaptive_cand, sql_cosine_rerank, sql_lsh_sig
 from p6_spark.sources.tables import load_table
 
 _MP_TABLES = 2
@@ -37,8 +37,8 @@ def _mp_probe_list_sql(sig: str = "sig") -> str:
 WITH e AS (SELECT vec_id, embedding::double[] AS v FROM embeddings),
 sigs AS (
   SELECT vec_id, v,
-         {_sql_lsh_sig(0, _MP_PLANES)} AS s0,
-         {_sql_lsh_sig(1, _MP_PLANES)} AS s1
+         {sql_lsh_sig(0, _MP_PLANES)} AS s0,
+         {sql_lsh_sig(1, _MP_PLANES)} AS s1
   FROM e
 ),
 b AS (
@@ -54,23 +54,7 @@ cand AS (
   FROM qp JOIN b c ON c.tbl = qp.tbl AND c.sig = qp.sig
   WHERE c.vec_id <> qp.vec_id
 ),
-scored AS (
-  SELECT query_id, match_id,
-         round(list_inner_product(qe.v, ce.v)
-               / (sqrt(list_inner_product(qe.v, qe.v)) * sqrt(list_inner_product(ce.v, ce.v))),
-               6) AS cos_sim
-  FROM cand
-  JOIN e qe ON qe.vec_id = query_id
-  JOIN e ce ON ce.vec_id = match_id
-),
-ranked AS (
-  SELECT query_id, match_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, match_id) AS rnk
-  FROM scored
-)
-SELECT query_id, match_id, cos_sim, rnk FROM ranked WHERE rnk <= 5
-ORDER BY query_id, rnk
-""",
+{sql_cosine_rerank(5)}""",
     doc="Multi-probe LSH ANN (Lv et al.'s dial, 1-bit probe ring): each "
     "query probes its exact bucket PLUS the 8 buckets one Hamming flip "
     "away, in only 2 OR-amplified tables — recall comparable to "
@@ -132,7 +116,7 @@ _AUDIT_MIN_COS = 0.3
 @register(
     "dd_blocking_quality_audit",
     oracle=f"""
-WITH {_sql_adaptive_cand()},
+WITH {sql_adaptive_cand()},
 p AS (SELECT vec_id, v FROM e WHERE vec_id < {_AUDIT_PANEL}),
 truth AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b

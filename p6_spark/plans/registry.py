@@ -12,6 +12,10 @@ hash-matching possible:
   final value is cast back to double.
 - Timestamps are never emitted raw: formatted strings / extracted ints.
 - Every top-k has a total-order tiebreaker.
+
+Shared twins live in ``plans/twins.py``: an oracle fragment that more than
+one query uses (the token rule, MinHash/LSH banding, bounded CC, ...) is
+written there once and imported, never pasted into a second oracle.
 """
 
 from __future__ import annotations

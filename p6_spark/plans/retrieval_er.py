@@ -15,12 +15,10 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.materialize import materialize
 from p6_spark.operators.text import md5_int, tokens
-from p6_spark.plans.llm_ops import _sql_minhash_sig
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MD5INT, SQL_TOKENS, sql_lsh_pairs, sql_minhash_sig
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -33,7 +31,7 @@ _SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, n_chars, n_chars // 16 AS blk,
-         list_sort(list_distinct({_SQL_TOKENS})) AS toks
+         list_sort(list_distinct({SQL_TOKENS})) AS toks
   FROM documents
 ),
 ordered AS (
@@ -123,7 +121,7 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_inverted_index",
     oracle=f"""
 WITH posting AS (
-  SELECT unnest({_SQL_TOKENS}) AS token, doc_id
+  SELECT unnest({SQL_TOKENS}) AS token, doc_id
   FROM documents
 ),
 idx AS (
@@ -185,7 +183,7 @@ _BLOOM_K = 3
 
 def _sql_bloom_pos(key: str, i: int) -> str:
     seeded = "'" + str(i) + "_' || " + key
-    return _SQL_MD5INT.format(x=seeded) + " % " + str(_BLOOM_M)
+    return SQL_MD5INT.format(x=seeded) + " % " + str(_BLOOM_M)
 
 
 @register(
@@ -324,27 +322,12 @@ e{r} AS MATERIALIZED (
     "q_graph_kcore",
     oracle=(
         "WITH "
-        + _sql_minhash_sig("TRUE").lstrip().lstrip("\n")
-        + """,
-bands AS (
-  SELECT doc_id, 0 AS band_idx, cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
-  UNION ALL SELECT doc_id, 1, cast(h2 AS varchar) || '_' || cast(h3 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 2, cast(h4 AS varchar) || '_' || cast(h5 AS varchar) FROM sig
-  UNION ALL SELECT doc_id, 3, cast(h6 AS varchar) || '_' || cast(h7 AS varchar) FROM sig
-),
-small_buckets AS MATERIALIZED (
-  SELECT band_idx, band_val FROM bands
-  GROUP BY 1, 2 HAVING count(*) <= 20
-),
-sb AS MATERIALIZED (
-  SELECT b.doc_id, b.band_idx, b.band_val
-  FROM bands b JOIN small_buckets USING (band_idx, band_val)
-),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-  FROM sb a JOIN sb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),"""
+        + sql_minhash_sig("TRUE").lstrip().lstrip("\n")
+        + ",\n"
+        + sql_lsh_pairs(
+            name="e0", select="a.doc_id AS u, b.doc_id AS v", materialized=True, compact=True
+        )
+        + ","
         + _sql_kcore_round("e0", 1, 2)
         + ","
         + _sql_kcore_round("e1", 2, 2)

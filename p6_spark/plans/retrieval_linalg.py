@@ -11,10 +11,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6_spark.materialize import materialize
+from p6_spark.operators.similarity import gram_products
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_IVF_MODEL, SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
-_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -31,7 +32,7 @@ _BM25_QUERY = ("vector", "stream", "window")
 @register(
     "txt_bm25",
     oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKENS}) AS t FROM documents),
+WITH tok AS (SELECT doc_id, unnest({SQL_TOKENS}) AS t FROM documents),
 dl AS (SELECT doc_id, cast(count(*) AS bigint) AS dl FROM tok GROUP BY doc_id),
 stats AS (
   SELECT cast(count(*) AS bigint) AS n,
@@ -207,21 +208,7 @@ ORDER BY v.i
 )
 def ml_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 10000, 0).cast("long")
-    )
-    e = emb.select("vec_id", qv.alias("qv"))
-    rows = e.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "vi"), F.col("qv")
-    ).select(
-        (F.col("pos0") + 1).alias("i"),
-        "vi",
-        F.expr("slice(qv, pos0 + 1, size(qv) - pos0)").alias("tail"),
-    )
-    prods = rows.select(
-        "i",
-        F.posexplode(F.expr("transform(tail, x -> x * vi)")).alias("dj", "p"),
-    ).select("i", (F.col("i") + F.col("dj")).alias("j"), "p")
+    prods = gram_products(emb)
     gram = prods.groupBy("i", "j").agg(F.sum("p").alias("gram"))
     # the expensive embeddings scan happens once; iterations reuse it
     gramf = materialize(
@@ -384,10 +371,8 @@ def ml_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_sweep_oracle() -> str:
-    from p6_spark.plans.llm_ops import _SQL_IVF_MODEL
-
     return f"""
-WITH {_SQL_IVF_MODEL},
+WITH {SQL_IVF_MODEL},
 bf AS (
   SELECT eq.vec_id AS query_id, em.vec_id AS match_id,
          sum((eq.v - em.v) * (eq.v - em.v)) AS dist2

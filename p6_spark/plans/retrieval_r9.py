@@ -33,8 +33,15 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.llm_ops import _SQL_TOKENS, _sql_bounded_cc, _sql_minhash_sig
+from p6_spark.pipelines.llm_corpus import percentile_prune_report
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import (
+    SQL_LANG_QUALITY_CUM,
+    SQL_MD5INT,
+    SQL_TOKENS,
+    sql_bounded_cc,
+    sql_minhash_sig,
+)
 from p6_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -643,7 +650,6 @@ def _pois_case(h: str) -> str:
     return f"CASE {branches} ELSE 9 END"
 
 
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 @register(
@@ -656,7 +662,7 @@ WITH base AS (
 ),
 weighted AS (
   SELECT r.b, y,
-         {_pois_case(_SQL_MD5INT.format(x="'boot' || r.b || '_' || k"))} AS w
+         {_pois_case(SQL_MD5INT.format(x="'boot' || r.b || '_' || k"))} AS w
   FROM base CROSS JOIN range(0, {_BOOT_B}) r(b)
 ),
 reps AS (
@@ -777,7 +783,7 @@ def ml_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dd_leakage_safe_split",
     oracle=f"""
-WITH {_sql_minhash_sig('TRUE')},
+WITH {sql_minhash_sig('TRUE')},
 bands AS (
   SELECT doc_id, 0 AS band_idx,
          cast(h0 AS varchar) || '_' || cast(h1 AS varchar) AS band_val FROM sig
@@ -807,14 +813,14 @@ edges AS MATERIALIZED (
   UNION
   SELECT id_b, id_a FROM pairs
 ),
-{_sql_bounded_cc()},
+{sql_bounded_cc()},
 comp_full AS (
   SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
   FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 ),
 splits AS MATERIALIZED (
   SELECT doc_id, component,
-         CASE WHEN {_SQL_MD5INT.format(x="'split_' || component")} % 10 < 9
+         CASE WHEN {SQL_MD5INT.format(x="'split_' || component")} % 10 < 9
               THEN 'train' ELSE 'val' END AS split
   FROM comp_full
 ),
@@ -924,23 +930,9 @@ WITH scored AS (
               ELSE cast(len(t) AS bigint) END AS n_tok,
          (cast(len(list_distinct(t)) AS bigint) * 1000000)
            // greatest(len(t), 1) AS qs
-  FROM (SELECT doc_id, lang, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, lang, {SQL_TOKENS} AS t FROM documents)
 ),
-per_s AS (
-  SELECT lang, qs, cast(count(*) AS bigint) AS cnt,
-         cast(sum(n_tok) AS bigint) AS tok
-  FROM scored GROUP BY 1, 2
-),
-cum AS (
-  SELECT lang, qs, cnt, tok,
-         sum(cnt) OVER (PARTITION BY lang ORDER BY qs
-                        ROWS UNBOUNDED PRECEDING) AS cum_cnt,
-         sum(tok) OVER (PARTITION BY lang ORDER BY qs
-                        ROWS UNBOUNDED PRECEDING) AS cum_tok,
-         sum(cnt) OVER (PARTITION BY lang) AS nd,
-         sum(tok) OVER (PARTITION BY lang) AS tok_total
-  FROM per_s
-)
+{SQL_LANG_QUALITY_CUM}
 SELECT lang,
        cast(max(nd) AS bigint) AS n_docs,
        cast(max(tok_total) AS bigint) AS tok_total,
@@ -1009,42 +1001,4 @@ def pipe_percentile_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("_num div greatest(n_tok, cast(1 as bigint))").alias("qs"),
         )
     )
-    per_s = scored.groupBy("lang", "qs").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("n_tok").alias("tok")
-    )
-    wc = W.partitionBy("lang").orderBy("qs").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    wl = W.partitionBy("lang")
-    cum = per_s.select(
-        "lang",
-        "qs",
-        F.sum("cnt").over(wc).alias("cum_cnt"),
-        F.sum("tok").over(wc).alias("cum_tok"),
-        F.sum("cnt").over(wl).alias("nd"),
-        F.sum("tok").over(wl).alias("tok_total"),
-    )
-    return (
-        cum.groupBy("lang")
-        .agg(
-            F.max("nd").cast("long").alias("n_docs"),
-            F.max("tok_total").cast("long").alias("tok_total"),
-            F.expr(
-                "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4 THEN qs END),"
-                " -1) AS bigint)"
-            ).alias("threshold_x1e6"),
-            F.expr(
-                "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-                " THEN cum_cnt END), 0) AS bigint)"
-            ).alias("n_dropped"),
-            F.expr(
-                "cast(max(nd) - coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-                " THEN cum_cnt END), 0) AS bigint)"
-            ).alias("n_kept"),
-            F.expr(
-                "cast(coalesce(max(CASE WHEN cum_cnt <= nd div 4"
-                " THEN cum_tok END), 0) AS bigint)"
-            ).alias("tok_dropped"),
-        )
-        .orderBy("lang")
-    )
+    return percentile_prune_report(scored).orderBy("lang")

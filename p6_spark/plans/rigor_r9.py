@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6_spark.materialize import materialize
-from p6_spark.plans.eval_r8 import _SQL_MATCH_CTES, _pair_counts
+from p6_spark.plans.eval_r8 import _pair_counts
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MATCH_CTES, SQL_TOKENS
 from p6_spark.plans.scalar_bounds import (
     DECON_BROADCAST_MAX_BENCH_DOCS,
     bench_doc_count,
@@ -31,7 +32,6 @@ from p6_spark.plans.scalar_bounds import (
 from p6_spark.sources.tables import load_table
 
 # DuckDB spelling of the whitespace tokenizer (same as llm_ops)
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +362,7 @@ _WILSON_HI = (
 @register(
     "ml_winrate_wilson",
     oracle=f"""
-WITH {_SQL_MATCH_CTES}
+WITH {SQL_MATCH_CTES}
 SELECT t_a, t_b, cast(n_games AS bigint) AS n_games, a_wins,
        cast((a_wins * 1000000) // n_games AS bigint) AS winrate_x1e6,
        {_WILSON_LO} AS wilson_lo_x1e6,
@@ -419,7 +419,7 @@ WITH scored AS (
               ELSE len(t) END AS n_tok,
          (len(list_distinct(t)) * 1000000) // greatest(len(t), 1)
            AS qscore_x1e6
-  FROM (SELECT doc_id, lang, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, lang, {SQL_TOKENS} AS t FROM documents)
 ),
 ranked AS (
   SELECT *,
@@ -455,8 +455,8 @@ ORDER BY selected DESC, lang
     tags=("pipeline", "curation", "quality", "fixed-point", "window"),
 )
 def pipe_quality_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from p6_spark.operators.ranking import two_phase_rank
     from p6_spark.operators.text import tokens
+    from p6_spark.pipelines.llm_corpus import quality_budget_rank
 
     docs = load_table(spark, sf_dir, "documents")
     scored = (
@@ -493,14 +493,7 @@ def pipe_quality_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    ranked = two_phase_rank(
-        scored,
-        [F.desc("qscore_x1e6"), F.asc("doc_id")],
-        F.col("qscore_x1e6"),
-        descending=True,
-        cum_cols=["n_tok"],
-    )
-    budget = scored.agg(F.expr("sum(n_tok) div 4").alias("budget"))
+    ranked, budget = quality_budget_rank(scored)
     return (
         ranked.crossJoin(F.broadcast(budget))
         .groupBy(
@@ -661,7 +654,7 @@ def _sql_shingles(n: int) -> str:
 WITH sh AS (
   SELECT doc_id, source,
          unnest(list_distinct({_sql_shingles(_DECON_N)})) AS s
-  FROM (SELECT doc_id, source, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, source, {SQL_TOKENS} AS t FROM documents)
 ),
 bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0),
 train AS (SELECT doc_id, source FROM documents WHERE doc_id % 97 <> 0),

@@ -16,10 +16,9 @@ from pyspark.sql.window import Window as W
 
 from p6_spark.operators.text import md5_int, tokens
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MD5INT, SQL_TOKENS
 from p6_spark.sources.tables import load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-_SQL_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -468,12 +467,12 @@ _FH_DIM = 64
     "txt_feature_hash",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents WHERE doc_id < 40
+  SELECT doc_id, unnest({SQL_TOKENS}) AS tok FROM documents WHERE doc_id < 40
 ),
 hashed AS (
   SELECT doc_id,
-         {_SQL_MD5INT.format(x="'fh_' || tok")} % {_FH_DIM} AS dim,
-         CASE WHEN {_SQL_MD5INT.format(x="'fhs_' || tok")} % 2 = 0 THEN 1 ELSE -1 END AS sgn
+         {SQL_MD5INT.format(x="'fh_' || tok")} % {_FH_DIM} AS dim,
+         CASE WHEN {SQL_MD5INT.format(x="'fhs_' || tok")} % 2 = 0 THEN 1 ELSE -1 END AS sgn
   FROM toks
 ),
 comps AS (

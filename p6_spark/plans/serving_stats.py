@@ -11,9 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import SQL_MD5INT
 from p6_spark.sources.tables import load_table
 
-_MD5INT = "('0x' || substr(md5({x}), 1, 8))::bigint"
 
 
 # ---------------------------------------------------------------------------
@@ -137,8 +137,8 @@ _KMV_K = 64
 
 
 def _kmv_sql_pair(name: str, tbl_a: str, key_a: str, tbl_b: str, key_b: str) -> str:
-    ha = _MD5INT.format(x=f"cast({key_a} AS varchar)")
-    hb = _MD5INT.format(x=f"cast({key_b} AS varchar)")
+    ha = SQL_MD5INT.format(x=f"cast({key_a} AS varchar)")
+    hb = SQL_MD5INT.format(x=f"cast({key_b} AS varchar)")
     return f"""
 SELECT '{name}' AS pair,
        (SELECT CASE WHEN count(*) < {_KMV_K} THEN count(*)

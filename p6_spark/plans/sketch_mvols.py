@@ -7,11 +7,12 @@ equations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from p6_spark.plans.registry import register
+from p6_spark.plans.twins import sql_ols2_sums
 from p6_spark.sources.tables import load_table
 
 
@@ -157,23 +158,35 @@ def q_histogram_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _ols2_sums(li: DataFrame, *extra: Column) -> tuple[DataFrame, DataFrame]:
+    """(pts, s): the (x1 = quantity, x2 = discount%, y = price cents)
+    points of lineitem and the 1-row Gramian sums n, s1, s2, sy, s11,
+    s12, s22, s1y, s2y as decimal(38,0), plus any ``extra`` aggregates."""
+    pts = li.select(
+        F.col("l_quantity").cast("long").alias("x1"),
+        F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
+        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("y"),
+    )
+    dec = "cast(sum({e}) as decimal(38,0))"
+    s = pts.agg(
+        F.expr("cast(count(*) as decimal(38,0))").alias("n"),
+        F.expr(dec.format(e="x1")).alias("s1"),
+        F.expr(dec.format(e="x2")).alias("s2"),
+        F.expr(dec.format(e="y")).alias("sy"),
+        F.expr(dec.format(e="x1 * x1")).alias("s11"),
+        F.expr(dec.format(e="x1 * x2")).alias("s12"),
+        F.expr(dec.format(e="x2 * x2")).alias("s22"),
+        F.expr(dec.format(e="x1 * y")).alias("s1y"),
+        F.expr(dec.format(e="x2 * y")).alias("s2y"),
+        *extra,
+    )
+    return pts, s
+
+
 @register(
     "ml_linreg2",
-    oracle="""
-WITH pts AS (
-  SELECT cast(l_quantity AS bigint) AS x1,
-         cast(round(l_discount * 100, 0) AS bigint) AS x2,
-         cast(round(l_extendedprice * 100, 0) AS bigint) AS y
-  FROM lineitem
-),
-s AS (
-  SELECT count(*)::HUGEINT AS n,
-         sum(x1)::HUGEINT AS s1, sum(x2)::HUGEINT AS s2, sum(y)::HUGEINT AS sy,
-         sum(x1 * x1)::HUGEINT AS s11, sum(x1 * x2)::HUGEINT AS s12,
-         sum(x2 * x2)::HUGEINT AS s22,
-         sum(x1 * y)::HUGEINT AS s1y, sum(x2 * y)::HUGEINT AS s2y
-  FROM pts
-),
+    oracle=f"""
+WITH {sql_ols2_sums()},
 d AS (
   SELECT n, sy, s1, s2,
          n * (s11 * s22 - s12 * s12)
@@ -207,24 +220,7 @@ FROM d
     tags=("ml", "agg", "fixed-point"),
 )
 def ml_linreg2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    pts = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("y"),
-    )
-    dec = "cast(sum({e}) as decimal(38,0))"
-    s = pts.agg(
-        F.expr("cast(count(*) as decimal(38,0))").alias("n"),
-        F.expr(dec.format(e="x1")).alias("s1"),
-        F.expr(dec.format(e="x2")).alias("s2"),
-        F.expr(dec.format(e="y")).alias("sy"),
-        F.expr(dec.format(e="x1 * x1")).alias("s11"),
-        F.expr(dec.format(e="x1 * x2")).alias("s12"),
-        F.expr(dec.format(e="x2 * x2")).alias("s22"),
-        F.expr(dec.format(e="x1 * y")).alias("s1y"),
-        F.expr(dec.format(e="x2 * y")).alias("s2y"),
-    )
+    pts, s = _ols2_sums(load_table(spark, sf_dir, "lineitem"))
     d = s.select(
         "n",
         F.expr(
@@ -263,22 +259,8 @@ def ml_linreg2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_linreg2_anova",
-    oracle="""
-WITH pts AS (
-  SELECT cast(l_quantity AS bigint) AS x1,
-         cast(round(l_discount * 100, 0) AS bigint) AS x2,
-         cast(round(l_extendedprice * 100, 0) AS bigint) AS y
-  FROM lineitem
-),
-s AS (
-  SELECT count(*)::HUGEINT AS n,
-         sum(x1)::HUGEINT AS s1, sum(x2)::HUGEINT AS s2, sum(y)::HUGEINT AS sy,
-         sum(x1 * x1)::HUGEINT AS s11, sum(x1 * x2)::HUGEINT AS s12,
-         sum(x2 * x2)::HUGEINT AS s22,
-         sum(x1 * y)::HUGEINT AS s1y, sum(x2 * y)::HUGEINT AS s2y,
-         sum(y * y)::HUGEINT AS syy
-  FROM pts
-),
+    oracle=f"""
+WITH {sql_ols2_sums('sum(y * y)::HUGEINT AS syy')},
 d AS (
   SELECT *,
          n * (s11 * s22 - s12 * s12)
@@ -329,23 +311,8 @@ FROM (
     tags=("ml", "stats", "fixed-point"),
 )
 def ml_linreg2_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    pts = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("y"),
-    )
-    dec = "cast(sum({e}) as decimal(38,0))"
-    s = pts.agg(
-        F.expr("cast(count(*) as decimal(38,0))").alias("n"),
-        F.expr(dec.format(e="x1")).alias("s1"),
-        F.expr(dec.format(e="x2")).alias("s2"),
-        F.expr(dec.format(e="y")).alias("sy"),
-        F.expr(dec.format(e="x1 * x1")).alias("s11"),
-        F.expr(dec.format(e="x1 * x2")).alias("s12"),
-        F.expr(dec.format(e="x2 * x2")).alias("s22"),
-        F.expr(dec.format(e="x1 * y")).alias("s1y"),
-        F.expr(dec.format(e="x2 * y")).alias("s2y"),
+    pts, s = _ols2_sums(
+        load_table(spark, sf_dir, "lineitem"),
         # y*y alone can overflow the long SUM accumulator at sf>=0.1
         # (1e14 per row x 6e5 rows) — promote per row, not post-sum
         F.expr("sum(cast(y as decimal(38,0)) * y)").alias("syy"),

@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM in whole GiB, between 1g and 48g: a default
+    that fits the machine it runs on (a fixed 48g let a shared test JVM
+    outgrow a 15 GB box)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "p6_spark",
     cpus: int | None = None,
@@ -22,6 +33,8 @@ def get_spark(
     """Build (or reuse) the tuned session.
 
     ``SPARK_GRAFT_CPUS`` overrides parallelism (harness contract).
+    ``P6_SPARK_DRIVER_MEM`` overrides the driver heap (default:
+    ``_default_driver_memory()``).
     ``extra_conf`` overlays builder configs (measurement harnesses, e.g.
     the memory profiler re-enabling the UI for its stage-metrics REST
     API) — only effective when this call CREATES the session.
@@ -38,7 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("P6_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("P6_SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-mode split sizing: harness files are a few MB, and the

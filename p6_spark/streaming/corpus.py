@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from p6_spark.materialize import materialize
+from p6_spark.operators.dedup import band_array
 
 
 DOCUMENTS_SCHEMA = T.StructType(
@@ -122,24 +123,6 @@ def rowwise_minhash_cols(text, num_hashes: int = _N_HASHES) -> dict:
     return {f"h{i}": F.array_min(F.transform(toks, _h(i))) for i in range(num_hashes)}
 
 
-def _band_array(num_hashes: int = _N_HASHES, band_size: int = _BAND_SIZE):
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.col(f"h{b * band_size + j}").cast("string")
-                        for j in range(band_size)
-                    ],
-                ).alias("band_val"),
-            )
-            for b in range(num_hashes // band_size)
-        ]
-    )
-
-
 def corpus_band_index(corpus: DataFrame, cap: int = _PROBE_CAP) -> DataFrame:
     """STATIC probe index of the existing corpus: banded minhash with
     buckets above ``cap`` members dropped (non-discriminative mass, the
@@ -150,7 +133,8 @@ def corpus_band_index(corpus: DataFrame, cap: int = _PROBE_CAP) -> DataFrame:
 
     sigs = dd.minhash_signatures(corpus)
     banded = sigs.select(
-        F.col("doc_id").alias("c_id"), F.explode(_band_array()).alias("band")
+        F.col("doc_id").alias("c_id"),
+        F.explode(band_array(_N_HASHES, _BAND_SIZE)).alias("band"),
     ).select("c_id", "band.band_idx", "band.band_val")
     small = (
         banded.groupBy("band_idx", "band_val")
@@ -188,7 +172,9 @@ def incremental_probe_stream(
             *[v.alias(k) for k, v in hcols.items()],
         )
         .filter(F.col("h0").isNotNull())
-        .select("b_id", "b_toks", F.explode(_band_array()).alias("band"))
+        .select(
+            "b_id", "b_toks", F.explode(band_array(_N_HASHES, _BAND_SIZE)).alias("band")
+        )
         .select("b_id", "b_toks", "band.band_idx", "band.band_val")
     )
     cand = (

@@ -1,5 +1,8 @@
 """Run a subset (or all) registered queries against their DuckDB oracles
-at a given SF dir — the local twin of the driver's t2 gate.
+at a given SF dir — the local twin of the driver's t2 gate. The session is
+the engine's own (p6_spark.session.get_spark: AQE, Arrow, UTC), so the
+sweep certifies the configuration the tests and benches run;
+SPARK_GRAFT_CPUS sets its parallelism and P6_SPARK_DRIVER_MEM its heap.
 
 Usage: python scripts/check_queries.py [--sf DIR] [name ...]
 """
@@ -20,21 +23,13 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from oracle_utils import compare, run_oracle
     from p6_spark.materialize import release
     from p6_spark.plans.registry import QUERIES, _load_all
+    from p6_spark.session import get_spark
 
     _load_all()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("check")
-        .getOrCreate()
-    )
+    spark = get_spark("check")
     spark.sparkContext.setLogLevel("ERROR")
 
     names = args.names or list(QUERIES)

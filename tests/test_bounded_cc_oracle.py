@@ -10,7 +10,10 @@ from __future__ import annotations
 import duckdb
 
 from p6_spark.operators.graph import connected_components
-from p6_spark.plans.llm_ops import _CC_ORACLE_ROUNDS, _sql_bounded_cc
+from p6_spark.plans.twins import (
+    CC_ORACLE_ROUNDS as _CC_ORACLE_ROUNDS,
+    sql_bounded_cc as _sql_bounded_cc,
+)
 
 
 def _duck_cc(edge_pairs):

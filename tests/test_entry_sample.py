@@ -27,24 +27,15 @@ def test_anchor_window_is_flagship_plus_parity():
 
 
 def test_rotation_prefers_changed_code_then_never_certified():
-    # round 12 (VERDICT r11 item 4): the rotating window leads with the
-    # rewritten-query priority list (the driver must re-certify changed
-    # code), then fills with never-certified names while any remain
+    # the rotating window leads with never-certified names while any remain
     certified = e._certified_names()
-    sample = e.proposed_sample()
-    rotating = sample[e._FIXED_N :]
-    prio_expected = [n for n in e._PRIORITY if n in set(e.queries())]
-    assert set(prio_expected) <= set(rotating)
-    non_prio = [n for n in rotating if n not in set(e._PRIORITY)]
+    rotating = e.proposed_sample()[e._FIXED_N :]
     uncertified_pool = [
-        n
-        for n in e.queries()
-        if n not in certified
-        and n not in e._ANCHORS
-        and n not in set(e._PRIORITY)
+        n for n in e.queries() if n not in certified and n not in e._ANCHORS
     ]
-    if len(uncertified_pool) >= len(non_prio):
-        assert all(n not in certified for n in non_prio)
+    n_fresh = min(len(uncertified_pool), len(rotating))
+    assert all(n not in certified for n in rotating[:n_fresh])
+    assert all(n in certified for n in rotating[n_fresh:])
 
 
 def test_sample_rotates_across_rounds_with_stable_anchors():

@@ -188,7 +188,7 @@ def test_release_drains_materialized_blocks(spark):
 def _sync_min_label_rounds(edges, rounds):
     """Reference synchronous min-label propagation: label state after
     exactly `rounds` rounds from label(v)=v — the l{rounds} CTE of
-    plans/llm_ops._sql_bounded_cc, driver-side."""
+    plans/twins.sql_bounded_cc, driver-side."""
     sym = {}
     for a, b in edges:
         sym.setdefault(a, set()).add(b)

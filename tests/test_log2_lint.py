@@ -11,7 +11,7 @@ Scope: log2 is banned from every string that reaches SPARK's SQL parser
 (``F.expr`` / ``selectExpr`` / ``spark.sql``) and as a pyspark function
 attribute (``F.log2``). DuckDB ORACLE SQL (the ``oracle=`` strings) is
 deliberately allowed — DuckDB's log2 IS exact at powers of two (measured
-to 2^50, see operators/similarity.py), and llm_ops' oracle twin uses it.
+to 2^50, see operators/similarity.py), and plans/twins.sql_adaptive_cand uses it.
 """
 
 from __future__ import annotations

@@ -65,6 +65,30 @@ def test_unparseable_cell_rejected(spark):
     assert any("Cannot parse HPO term+ID" in a["message"] for a in r.audit.collect())
 
 
+def test_null_cell_rejected_not_dropped(spark):
+    # a NULL HPO cell is not NAD: it reaches the parse audit, which renders
+    # the missing cell as 'nan' (the reference's str(NaN))
+    r = map_phenotype_table(
+        spark,
+        pheno_df(
+            spark,
+            [
+                ("1", "HP:0000510", "T0", "O"),
+                ("2", None, "T0", "O"),
+                ("3", "NAD", "T0", "O"),
+                ("4", "??", "T0", "O"),
+            ],
+        ),
+    )
+    assert [x["phenotype_patient_ID"] for x in r.valid.collect()] == ["1"]
+    nan_rows = [
+        (a["level"], a["message"])
+        for a in r.audit.collect()
+        if a["message"].endswith("'nan'")
+    ]
+    assert nan_rows == [("error", "Sheet 'phenotype': Cannot parse HPO term+ID from 'nan'")]
+
+
 def test_status_truthiness_o_and_e_both_true(spark):
     # 'O' and 'E' both truthy through the fallback — bug-compatible with
     # the reference (_to_bool, SURVEY §2.3 F2)
